@@ -65,13 +65,24 @@ object Bench {
     else if (spillBytes > 0) "spill"
     else "code"
 
-  /** Sums task metrics across every task that ends while registered.
-    * Listener-bus delivery is asynchronous — [[diagnose]] polls via
-    * [[drainTallies]] until the tallies go quiet before reading them. */
+  /** Sums task metrics across every task that ends while registered, and
+    * counts the jobs, stages and tasks that run meanwhile. Listener-bus
+    * delivery is asynchronous — [[diagnose]] polls via [[drainTallies]]
+    * until the tallies go quiet before reading them. */
   private[graft] class TaskTally extends org.apache.spark.scheduler.SparkListener {
     val runMs = new java.util.concurrent.atomic.AtomicLong
     val gcMs = new java.util.concurrent.atomic.AtomicLong
     val spillBytes = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val stages = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageCompleted(
+        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(e.stageInfo.numTasks.toLong)
+    }
     override def onTaskEnd(
         e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
@@ -93,7 +104,7 @@ object Bench {
     * uses only public API (listenerBus.waitUntilEmpty is private[spark]). */
   private[graft] def drainTallies(t: TaskTally, maxWaitMs: Long = 5000,
       stableForMs: Long = 200, pollMs: Long = 50): Unit = {
-    def snap = (t.runMs.get, t.gcMs.get, t.spillBytes.get)
+    def snap = (t.runMs.get, t.gcMs.get, t.spillBytes.get, t.stages.get)
     val deadline = System.nanoTime() + maxWaitMs * 1000000L
     var last = snap
     var stableSince = System.nanoTime()
@@ -121,8 +132,6 @@ object Bench {
     val wall = (System.nanoTime() - t0) / 1e9
     drainTallies(tally) // poll until the async listener bus goes quiet
     spark.sparkContext.removeSparkListener(tally)
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val verdict =
       if (!ok) "error"
       else classify(wall, baseSec, steadySec, tally.gcMs.get, tally.spillBytes.get)
@@ -149,6 +158,14 @@ object Bench {
     * (cols.reduce would throw; with no columns there is nothing for
     * count() to prune, so it is an honest force there). */
   def force(df: org.apache.spark.sql.DataFrame): Unit = {
+    if (df.schema.isEmpty) df.count() else forced(df).head()
+    ()
+  }
+
+  /** The one-row frame [[force]] executes for a frame with at least one
+    * column; Probe's `metrics` mode walks its executed plan. */
+  private[graft] def forced(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
     def hasMap(dt: DataType): Boolean = dt match {
@@ -157,86 +174,79 @@ object Bench {
       case a: ArrayType => hasMap(a.elementType)
       case _ => false
     }
-    if (df.schema.isEmpty) { df.count(); return }
     val cols = df.schema.fields.map { f =>
       if (hasMap(f.dataType)) xxhash64(to_json(col(f.name)))
       else xxhash64(col(f.name))
     }
-    df.select(cols.reduce(_ bitwiseXOR _).as("__h"))
-      .agg(expr("bit_xor(__h)")).head()
-    ()
+    df.select(cols.reduce(_ bitwiseXOR _).as("__h")).agg(expr("bit_xor(__h)"))
   }
+
+  /** `v` at 3 decimals; Locale.ROOT: '.' decimal point regardless of host
+    * locale. */
+  private[graft] def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Runs each labelled warm-up step in order; a step that throws is
+    * reported on stderr as `[<tag>] warm-up <label> failed: <cause>` and
+    * the remaining steps still run. */
+  private[graft] def warmUp(tag: String, steps: Seq[(String, () => Any)]): Unit =
+    for ((label, step) <- steps)
+      try step()
+      catch { case e: Throwable =>
+        System.err.println(s"[$tag] warm-up $label failed: $e") }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE (on by default in Spark 4) re-plans at shuffle boundaries; the
-      // skew-join split is the runtime guard for hot keys at the 100 TB
-      // design point — stated explicitly so the knobs are visible/tunable.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), scratch = true)
     // Warm the JVM/codegen/catalog once on the smoke SF so the first timed
     // query doesn't absorb session cold-start (BASELINE.md separates cold
     // vs warm: 3.5 s vs 0.38 s for the same query), and fill the shared
     // input caches (events ns-decode, ratings, capped ratings) so their
     // one-time materialization cost doesn't land on whichever query the
-    // map happens to iterate first.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    try {
-      Tables.events(spark, sfDir).count()
-      Tables.ratings(spark, sfDir).count()
-      Tables.cappedRatings(spark, sfDir).count()
-      Tables.contribRatings(spark, sfDir).count()
-    } catch { case _: Throwable => () }
-    // each family warm-up is independently best-effort: a failure in one
-    // must not silently skip the others (that would push a cache build
-    // into whichever family query the timed loop reaches first)
-    try // bias-predictor memo — shared by q62/q136 (r6: q136 absorbed it)
-      Tables.biasScored(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // pair-support memo — shared by the co-occurrence family (q107/q133/q134)
-      Tables.pairSupport(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // item-pair dots memo — shared by the item-similarity family (q63/q88)
-      Tables.itemDots(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // string-shingle grain — fills shingles5, used by q84/q92/q93/q106
-      SparkEntry.queries("q84_doc_fingerprint")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // compact shingle grain + pair memo — fills shingles5h and shpairs50,
-        // shared by the resemblance/containment/verify keys (q76/q129/q138/q270)
-      SparkEntry.queries("q76_dedup_ngram_jaccard")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // word-frequency family — fills words1, used by q49/q68/q69/q78/q99
-      SparkEntry.queries("q69_heavy_hitters")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    try // component-labels family — fills comp20, used by q93/q101
-      SparkEntry.queries("q93_dedup_components")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    // r10: the remaining session memos, profiled as the largest
-    // run1-vs-steady deltas (local sf0.1: q70 +1.8 s, q149 +1.7 s,
-    // q138 +1.6 s, q210 +1.0 s, q233 +0.9 s, q114/q231 +0.5 s each) —
-    // built here so run 1 measures each query's plan, not whichever
-    // memo it touches first. What remains in run 1 after this is
-    // per-plan JIT/codegen warm-up, which no warm-up short of running
-    // every query can move.
-    for (key <- Seq(
+    // map happens to iterate first. Each step is independently
+    // best-effort: a failure in one must not skip the others (that would
+    // push a cache build into whichever family query the timed loop
+    // reaches first).
+    def query(key: String): () => Any = () => SparkEntry.queries(key)(spark, sfDir).count()
+    warmUp("bench", Seq(
+      "entry" -> (() => SparkEntry.entry(spark).count()),
+      "shared inputs" -> { () =>
+        Tables.events(spark, sfDir).count()
+        Tables.ratings(spark, sfDir).count()
+        Tables.cappedRatings(spark, sfDir).count()
+        Tables.contribRatings(spark, sfDir).count()
+      },
+      // bias-predictor memo — shared by q62/q136 (r6: q136 absorbed it)
+      "biasScored" -> (() => Tables.biasScored(spark, sfDir).count()),
+      // pair-support memo — shared by the co-occurrence family (q107/q133/q134)
+      "pairSupport" -> (() => Tables.pairSupport(spark, sfDir).count()),
+      // item-pair dots memo — shared by the item-similarity family (q63/q88)
+      "itemDots" -> (() => Tables.itemDots(spark, sfDir).count()),
+      // string-shingle grain — fills shingles5, used by q84/q92/q93/q106
+      "q84_doc_fingerprint" -> query("q84_doc_fingerprint"),
+      // compact shingle grain + pair memo — fills shingles5h and shpairs50,
+      // shared by the resemblance/containment/verify keys (q76/q129/q138/q270)
+      "q76_dedup_ngram_jaccard" -> query("q76_dedup_ngram_jaccard"),
+      // word-frequency family — fills words1, used by q49/q68/q69/q78/q99
+      "q69_heavy_hitters" -> query("q69_heavy_hitters"),
+      // component-labels family — fills comp20, used by q93/q101
+      "q93_dedup_components" -> query("q93_dedup_components")) ++
+      // r10: the remaining session memos, profiled as the largest
+      // run1-vs-steady deltas (local sf0.1: q70 +1.8 s, q149 +1.7 s,
+      // q138 +1.6 s, q210 +1.0 s, q233 +0.9 s, q114/q231 +0.5 s each) —
+      // built here so run 1 measures each query's plan, not whichever
+      // memo it touches first. What remains in run 1 after this is
+      // per-plan JIT/codegen warm-up, which no warm-up short of running
+      // every query can move.
+      Seq(
         "q149_weighted_median",    // wmedGrain
         "q210_spearman_corr",      // spearmanSup_x / spearmanSup_y
         "q70_dedup_near_minhash",  // q70feats (MinHashLSH features)
         "q138_dedup_banded_verify",// simhash48 (shared with q86)
         "q231_kendall_tau",        // kendallCells (shared with q244)
         "q233_open_orders",        // openDeltas
-        "q114_rfm_segments"))      // rfm114
-      try SparkEntry.queries(key)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+        "q114_rfm_segments")       // rfm114
+        .map(k => k -> query(k)))
     // A failed query must be VISIBLE in the output line, not silently timed:
     // it keeps its wall time (so the total stays honest) and lands in
     // "failed" so a red query can't hide in a green-looking bench line.
@@ -287,8 +297,6 @@ object Bench {
     // unique "qNN" prefix (~1.4 KB for ~100 queries) and times printed at
     // 3 decimals — millisecond precision is already below this VM's
     // run-to-run noise floor.
-    def f3(v: Double): String = // Locale.ROOT: '.' decimal point regardless of host locale
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def shortKey(k: String): String = k.takeWhile(_ != '_')
     val collide = suite.map { case (k, _) => shortKey(k) }.distinct.size < suite.size
     def line(metric: String, outcomes: Seq[(String, Double, Boolean)]): String = {

@@ -285,18 +285,16 @@ object Scale {
   private def warmMemos(spark: SparkSession, dir: String,
       keys: Seq[String]): Unit = {
     val tabs = keys.flatMap(tableOf.getOrElse(_, Set.empty[String])).toSet
-    if (tabs("events"))
-      try Tables.events(spark, dir).count() catch { case _: Throwable => () }
-    // the shingle family split grains (r11): q93 fingerprints off the sha256
-    // STRING grain, q76's pair intersection off the compact 64-bit grain —
-    // warm only what the probed subset consumes, so an isolated q76 probe
-    // doesn't carry a string-shingle cache it never reads
-    if (keys.contains("q93_dedup_components"))
-      try operators.TextPipeline.shingles5(spark, dir).count()
-      catch { case _: Throwable => () }
-    if (keys.contains("q76_dedup_ngram_jaccard"))
-      try operators.TextPipeline.shingles5h(spark, dir).count()
-      catch { case _: Throwable => () }
+    Bench.warmUp("scale", Seq(
+      "events" -> (() => if (tabs("events")) Tables.events(spark, dir).count()),
+      // the shingle family split grains (r11): q93 fingerprints off the sha256
+      // STRING grain, q76's pair intersection off the compact 64-bit grain —
+      // warm only what the probed subset consumes, so an isolated q76 probe
+      // doesn't carry a string-shingle cache it never reads
+      "shingles5" -> (() => if (keys.contains("q93_dedup_components"))
+        operators.TextPipeline.shingles5(spark, dir).count()),
+      "shingles5h" -> (() => if (keys.contains("q76_dedup_ngram_jaccard"))
+        operators.TextPipeline.shingles5h(spark, dir).count())))
   }
 
   /** Runs each family in `keys` `runs` times against `dir`, returns
@@ -356,8 +354,8 @@ object Scale {
       : Seq[(String, ProbeTally, ProbeTally)] = {
     // fill both corpora's shared events memo first, same Bench discipline
     // as probe(): timings measure the plan, not a cold memo build
-    for (d <- Seq(uniDir, hotDir))
-      try Tables.events(spark, d).count() catch { case _: Throwable => () }
+    Bench.warmUp("scale",
+      Seq(uniDir, hotDir).map(d => s"events $d" -> (() => Tables.events(spark, d).count())))
     keys.map { key =>
       val fn = SparkEntry.queries.getOrElse(key, extraProbes(key))
       val reps = (1 to runs).map(_ =>
@@ -448,24 +446,16 @@ object Scale {
           require(i > 0, s"SPARK_GRAFT_SPARK_CONF pair without '=': $kv")
           (kv.take(i).trim, kv.drop(i + 1).trim)
         }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.files.maxPartitionBytes", mpb)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val spark = Session.local(cpus, scratch = false, conf = Seq(
+      "spark.sql.shuffle.partitions" -> shuffleParts,
+      "spark.sql.files.maxPartitionBytes" -> mpb,
       // Shuffle-file cleanup is driven by ContextCleaner, which only
       // fires on driver GC; a deep (×1000) probe with a big heap barely
       // GCs, so spill/shuffle dirs accumulate unboundedly across the
       // 600 M-row families and can fill the disk mid-probe (observed:
       // ~68 GB of /tmp spill before ENOSPC). Force a periodic GC so
       // finished stages' files are reclaimed while the probe runs.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "2min") ++ extraConf)
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val tabs =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -56,18 +56,11 @@ object StreamBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
     val nChunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "20").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep every micro-batch's progress for the inc100 sweep (default
-      // retention is 100 progress objects — the 100-chunk run plus its
-      // watermark-advance no-data batches would silently truncate)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // keep every micro-batch's progress for the inc100 sweep (default
+    // retention is 100 progress objects — the 100-chunk run plus its
+    // watermark-advance no-data batches would silently truncate)
+    val spark = Session.local(cpus, scratch = false,
+      conf = Seq("spark.sql.streaming.numRecentProgressUpdates" -> "512"))
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -180,17 +180,14 @@ object Tables {
     * 1.3 s at 4 partitions vs 9.8 s at 32 for the SAME wall, and every
     * light key's wall was flat-or-better at the small count. Partitions
     * are now sized to the DATA (guide §2.5 — partitions sized to data,
-    * not cores): rows / `spark.graft.spreadTargetRows` (default 25k,
-    * conf/env-overridable), capped at defaultParallelism, and still only
+    * not cores): rows / 25k, capped at defaultParallelism, and still only
     * when the build has fewer splits than that — at production scale a
     * fact scan already yields ≥ cores splits and this is a no-op (the
     * getNumPartitions probe is safe here because the build is narrow —
     * no AQE query stages to materialize). */
   private[graft] def spreadNarrow(spark: SparkSession, df: DataFrame,
       key: Column, rows: => Long): DataFrame = {
-    val target = spark.conf.getOption("spark.graft.spreadTargetRows")
-      .orElse(sys.env.get("SPARK_GRAFT_SPREAD_TARGET_ROWS"))
-      .map(_.toLong).getOrElse(25000L)
+    val target = 25000L
     val n = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (rows + target - 1) / target)).toInt
     if (df.rdd.getNumPartitions < n) df.repartition(n, key) else df
@@ -291,15 +288,13 @@ object Tables {
     * coalesced the build to 4 partitions and q64's 10 s of summed dot-agg
     * time ran 4-way). Per-partition cost here is fan-out-proportional,
     * not row-proportional, so these memos use a much smaller row target
-    * (`spark.graft.pairSpreadTargetRows`, default 2048 → the core cap at
-    * the bench SFs, ~1 partition on the tiny test fixtures). `rows` is
+    * (2048 rows per partition → the core cap at the bench SFs, ~1
+    * partition on the tiny test fixtures). `rows` is
     * the base events count — an upper bound for both grains (≤1 row per
     * event) that costs no extra job. */
   private def spreadFanout(spark: SparkSession, sfDir: String, df: DataFrame,
       key: Column): DataFrame = {
-    val target = spark.conf.getOption("spark.graft.pairSpreadTargetRows")
-      .orElse(sys.env.get("SPARK_GRAFT_PAIR_SPREAD_TARGET_ROWS"))
-      .map(_.toLong).getOrElse(2048L)
+    val target = 2048L
     val rows = memoizedCount(spark, sfDir, "events")
     val n = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (rows + target - 1) / target)).toInt

@@ -80,17 +80,7 @@ object Verify {
     // args: <sfDir> <outDir> [comma-separated query names — dev-only filter]
     val sfDir = args(0); val outDir = args(1)
     val only = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Scratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE skew-join split: the runtime hot-key guard (see Bench.scala).
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), scratch = true)
     run(spark, sfDir, outDir, only)
     spark.stop()
   }

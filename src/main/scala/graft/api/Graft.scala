@@ -698,9 +698,9 @@ object Graft {
     * collected to the driver (n−1 scalars — a shuffle-partition-count-sized
     * array, driver-safe at any scale). Eager, driver-local bounds are the
     * r15 fix for a MEASURED AQE behavior: exchange reuse never fires above
-    * a cached relation (ReuseProbe r15: 0 ReusedExchange in every
-    * cached-input executed plan — each textually duplicated subtree
-    * re-EXECUTES with its own metrics, vs 1 ReusedExchange for the same
+    * a cached relation (measured r15, pinned by PlanRegressionSpec: 0
+    * ReusedExchange in every cached-input executed plan — each textually
+    * duplicated subtree re-EXECUTES with its own metrics, vs 1 ReusedExchange for the same
     * shape over a raw parquet scan), so the old LAZY one-row bounds frame,
     * referenced by each blocked consumer, re-ran the full input aggregation
     * per reference (q145 at sf0.1: the fact-grain support agg executed 4×
@@ -1628,15 +1628,11 @@ object Graft {
     // exchanges for frames of |nodes| rows. Broadcast them EXPLICITLY
     // (guide §3.1: estimates go wrong after checkpoints — hint the side
     // you know), sized to the data: one count of the checkpointed node
-    // set, broadcast only below `spark.graft.pagerankBroadcastMaxNodes`
-    // (default 4M ≈ a ~100 MB built relation; a web-scale node set falls
-    // back to the shuffle form). Join strategy never changes rows, and
-    // each round's 10 dp pin already makes the contribution sum's
-    // partial-order drift invisible (scaladoc above).
-    val maxNodes = edges.sparkSession.conf
-      .getOption("spark.graft.pagerankBroadcastMaxNodes")
-      .map(_.toLong).getOrElse(4000000L)
-    val bcastRanks = nodes.count() <= maxNodes
+    // set, broadcast only below 4M nodes (≈ a ~100 MB built relation; a
+    // web-scale node set falls back to the shuffle form). Join strategy
+    // never changes rows, and each round's 10 dp pin already makes the
+    // contribution sum's partial-order drift invisible (scaladoc above).
+    val bcastRanks = nodes.count() <= 4000000L
     var ranks = nodes.select(col("__id"), lit(1.0).as("__r"))
     for (i <- 1 to iters) {
       val rsrc = ranks.withColumnRenamed("__id", "__src")

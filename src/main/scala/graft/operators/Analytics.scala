@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   * sufficient-statistics (Σx, Σy, Σxy, Σx², n) with map-side combine.
   */
 object Analytics {
+  /** Largest rank support q210 and q243 broadcast; beyond it they join
+    * shuffled-hash. */
+  private val RankBroadcastMaxRows = 1000000L
 
   /** percent_rank / cume_dist / ntile-free quantile position per supplier. */
   def q38(s: SparkSession, d: String): DataFrame = {
@@ -995,17 +998,15 @@ object Analytics {
     // and was SMJ-joined: both the 600k-row fact AND the rank side paid a
     // shuffle+sort. Mirror q243's explicit, data-sized strategy (guide
     // §3.1): broadcast while the support is small (skips the fact shuffle
-    // entirely), shuffled-hash beyond `spark.graft.rankBroadcastMaxRows`
+    // entirely), shuffled-hash beyond RankBroadcastMaxRows
     // (no sort; a fact-proportional broadcast would be a driver OOM at
     // 100 TB). Join strategy never changes rows; the q210 sums already
     // carry summation-order drift ≪ the 4 dp pin (scaladoc above).
     val supY = graft.Tables.memoized(s, d, "spearmanSup_y") {
       base.groupBy("rf", "y").agg(count(lit(1)).as("t"))
     }
-    val maxRows = s.conf.getOption("spark.graft.rankBroadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
     val ySmall = graft.Tables.memoizedFlag(s, d, "spearmanSupYSmall") {
-      supY.count() <= maxRows
+      supY.count() <= RankBroadcastMaxRows
     }
     val yRanks = fracRanks("y")
     val scored = base
@@ -1561,14 +1562,11 @@ object Analytics {
     // data (the q209 adaptive-facade pattern): broadcast while the
     // support is small (one memoized count of the cached grain; at the
     // bench SFs broadcast measures ~0.4 s faster than the shuffled-hash
-    // form), shuffled-hash beyond `spark.graft.rankBroadcastMaxRows`
-    // (default 1M rows ≈ 120 MB built — still far under executor memory;
-    // production deployments size it down with the conf).
+    // form), shuffled-hash beyond RankBroadcastMaxRows
+    // (1M rows ≈ 120 MB built — still far under executor memory).
     val rankedSide = ranked.select("v", "fr")
-    val maxRows = s.conf.getOption("spark.graft.rankBroadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
     val supSmall = graft.Tables.memoizedFlag(s, d, "kruskalSupSmall") {
-      sup.count() <= maxRows
+      sup.count() <= RankBroadcastMaxRows
     }
     val per = cells.join(
       if (supSmall) broadcast(rankedSide) else rankedSide.hint("shuffle_hash"),

@@ -215,14 +215,11 @@ object Recommender {
     * frame's partitioning. r14's events-cache spread silently moved
     * q66's holdout metrics through exactly that path; with this pin a
     * cache-layout change upstream can never move a declared ALS output
-    * again (MlSpec pins the law). The fixed count is a scale knob
-    * (`spark.graft.alsInputPartitions`, default 16) — it bounds only the
+    * again (MlSpec pins the law). The fixed count (16) bounds only the
     * split/blockify pass; ALS itself re-partitions into its own
     * user/item block grid immediately after. */
   private def alsCanonical(r: DataFrame): DataFrame = {
-    val n = r.sparkSession.conf
-      .getOption("spark.graft.alsInputPartitions").map(_.toInt).getOrElse(16)
-    r.repartition(n, col("user_id"), col("item"))
+    r.repartition(16, col("user_id"), col("item"))
   }
 
   private def alsOn(train: DataFrame,

@@ -32,7 +32,7 @@ object TextPipeline {
     * per execution (q79, q98, q167, q199, q234, q240, the BM25/ngram
     * Retrieval keys), and the memo chain feeding [[words1]] built its
     * cache from the single-split documents scan, leaving words1 CACHED AT
-    * ONE PARTITION (graft.CacheLayout: 270,704 token rows,
+    * ONE PARTITION (measured r14: 270,704 token rows,
     * cached_partitions=1 at sf0.1) — every consumer's first pipeline
     * stage ran serial at any core count (the r14 events-cache disease on
     * the text family). The build spreads by doc_id, sized to the CORPUS

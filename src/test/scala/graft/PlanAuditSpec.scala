@@ -7,15 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * `sbt -batch "testOnly * -- -l org.scalatest.tags.Slow"` (see BASELINE.md
   * "Round-gate profiles").
   *
-  * The full-inventory plan audit as a pinned suite (r14, verdict task #1).
-  * Until r13 the "zero ERROR keys; no CartesianProduct except q65's
-  * MLlib-internal one" invariant was re-established by hand each round via
-  * `runMain graft.Explain ALL` — and a cartesian regression adds NO
-  * exchange, so ShuffleCountSpec's shuffle budget could never catch it;
-  * only the manual ritual would. This suite runs [[Explain.census]] (the
-  * exact logic the manual audit prints) over every `SparkEntry.queries`
-  * key at sf0.001 and pins the audit's conclusions, so the invariant fails
-  * CI instead of waiting for someone to remember the ritual.
+  * The full-inventory plan audit as a pinned suite (r14). The "zero ERROR
+  * keys; no CartesianProduct except q65's MLlib-internal one" invariant
+  * is what `runMain graft.Probe plan <sfDir> ALL` prints — and a
+  * cartesian regression adds NO exchange, so ShuffleCountSpec's shuffle
+  * budget could never catch it. This suite runs [[Probe.census]] (the
+  * exact logic the audit prints) over every `SparkEntry.queries` key at
+  * sf0.001 and pins the audit's conclusions, so the invariant fails CI
+  * instead of waiting for someone to run the audit.
   *
   * Unlike PlanRegressionSpec's sweeps (which skip the keys that execute
   * jobs during plan CONSTRUCTION — ALS fits, fixpoint loops — for
@@ -31,7 +30,7 @@ class PlanAuditSpec extends AnyFunSuite {
   // model/fixpoint keys costs real jobs — don't pay it per test)
   private lazy val audit: Map[String, Either[String, Map[String, Int]]] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (k, fn) =>
-      k -> Explain.census(s, d, k, fn)
+      k -> Probe.census(s, d, k, fn)
     }.toMap
 
   test("census covers the full frozen inventory and no key's plan errors") {

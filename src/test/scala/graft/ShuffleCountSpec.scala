@@ -2,7 +2,6 @@ package graft
 
 import scala.io.Source
 
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shuffle-budget pin: every key's static plan (AQE off) must keep its
@@ -18,20 +17,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * costs anything. Budgets are the measured counts at pin time (Spark
   * 4.1.2): a change that REDUCES shuffles passes (tighten the file when
   * deliberate); a change that adds one fails until the budget is re-pinned
-  * with justification. The same iterative/model keys skipped by the other
-  * inventory sweeps are skipped here (their construction runs jobs; each
-  * has its own plan or quantitative coverage), and the key sets must match
-  * the file exactly so a new query cannot land unpinned.
+  * with justification (`runMain graft.Probe budget <sf0.001> ALL` prints
+  * the file). The keys whose construction runs jobs
+  * ([[Probe.constructionJobKeys]]) are skipped here as in the other
+  * inventory sweeps, and the key sets must match the file exactly so a
+  * new query cannot land unpinned.
   */
 class ShuffleCountSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   private val d = TestSpark.sf0001
 
   test("shuffle budget pin: no key's static plan exceeds its recorded exchange count") {
-    val skip = Set("q65_als_recommend", "q66_als_rmse",
-      "q70_dedup_near_minhash", "q93_dedup_components", "q101_dedup_cluster_keep",
-      "q105_curation_pipeline", "q113_item_pagerank", "q252_pca_power",
-      "q264_logreg_step")
     val src = Source.fromInputStream(
       getClass.getResourceAsStream("/shuffle_budget.txt"), "UTF-8")
     val budget: Map[String, Int] =
@@ -39,7 +35,7 @@ class ShuffleCountSpec extends AnyFunSuite {
         val Array(k, n) = l.trim.split("\\s+"); k -> n.toInt
       }.toMap finally src.close()
 
-    val keys = SparkEntry.queries.keySet.filterNot(skip)
+    val keys = SparkEntry.queries.keySet.filterNot(Probe.constructionJobKeys)
     val unpinned = keys -- budget.keySet
     val stale = budget.keySet -- keys
     assert(unpinned.isEmpty,
@@ -47,16 +43,10 @@ class ShuffleCountSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"stale entries in shuffle_budget.txt: ${stale.toSeq.sorted.mkString(", ")}")
 
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val over = keys.toSeq.sorted.flatMap { name =>
-        val n = SparkEntry.queries(name)(s, d).queryExecution.executedPlan
-          .collect { case e: ShuffleExchangeExec => e }.size
-        if (n > budget(name)) Some(s"$name ($n exchanges, budget ${budget(name)})")
-        else None
-      }
-      assert(over.isEmpty,
-        s"plans exceeding their shuffle budget:\n  ${over.mkString("\n  ")}")
-    } finally s.conf.set("spark.sql.adaptive.enabled", "true")
+    val over = Probe.shuffleCounts(s, d, keys.toSeq.sorted).collect {
+      case (name, n) if n > budget(name) => s"$name ($n exchanges, budget ${budget(name)})"
+    }
+    assert(over.isEmpty,
+      s"plans exceeding their shuffle budget:\n  ${over.mkString("\n  ")}")
   }
 }
