@@ -59,18 +59,26 @@ object Probe {
     } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
 
   /** ShuffleExchange count of each key's static plan (AQE off, restored
-    * afterwards). `plan.collect` does not descend into an
-    * InMemoryTableScan's cached plan, so only exchanges above any cache
-    * boundary count — the measure ShuffleCountSpec pins. */
+    * afterwards), with the session's memos released before and after the
+    * sweep. `plan.collect` does not descend into an InMemoryTableScan's
+    * cached plan, so only exchanges above any cache boundary count — the
+    * measure ShuffleCountSpec pins. */
   def shuffleCounts(spark: SparkSession, sfDir: String,
       keys: Seq[String]): Seq[(String, Int)] = {
     val aqe = "spark.sql.adaptive.enabled"
     val prior = spark.conf.get(aqe)
+    // a cached memo keeps the physical plan of the conf that first built
+    // it: memos left by earlier AQE-on work would make these counts
+    // depend on run order, and the AQE-off ones built here must not leak
+    Tables.release(spark)
     spark.conf.set(aqe, "false")
     try keys.map { k =>
       k -> SparkEntry.queries(k)(spark, sfDir).queryExecution.executedPlan
         .collect { case e: ShuffleExchangeExec => e }.size
-    } finally spark.conf.set(aqe, prior)
+    } finally {
+      spark.conf.set(aqe, prior)
+      Tables.release(spark)
+    }
   }
 
   private def walk(p: SparkPlan, depth: Int, out: StringBuilder): Unit = {

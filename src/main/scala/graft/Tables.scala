@@ -26,17 +26,24 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** events.ts has shipped as BOTH timestamp[ns] (read as long under the
-    * legacy flag — Spark 4 rejects ns timestamps by default,
-    * PARQUET_TYPE_ILLEGAL) and timestamp[us] (read natively as
-    * TIMESTAMP_NTZ). The loader normalizes either schema to the same
-    * contract: `ts` = long ns since epoch for exact integer arithmetic in
-    * gap/session/day-bucket queries, `tsc` = TIMESTAMP_NTZ so comparisons
-    * round-trip identically to DuckDB's naive TIMESTAMP (session TZ is UTC;
-    * no row carries sub-microsecond precision, so both directions are
-    * lossless).
-    */
-  /** Memoized, cached shared inputs. ~20 queries re-derive events (ns decode
+  /** Sanitized sfDir + a 32-bit hash: the readable part disambiguates the
+    * common case and the hash covers paths that sanitize identically — two
+    * sfDirs collide only if BOTH agree, i.e. effectively never (the hash
+    * alone would give a 2⁻³² birthday risk per session-lifetime pair). */
+  private def memoName(sfDir: String, key: String): String = {
+    val sane = sfDir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40)
+    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sfDir))
+    s"graft_memo_${key}_${sane}_$h"
+  }
+
+  /** Session-scoped memo+cache for any shared derived relation: builds (and
+    * `.cache()`s) at most once per (session, sfDir, key), then resolves
+    * through the session catalog — repeat calls get the cached plan via
+    * CacheManager's canonical-plan substitution. Returns the VIEW NAME so
+    * SQL-entry queries can reference the memo by name; [[release]] drops it
+    * with the rest.
+    *
+    * Why: ~20 queries re-derive events (ns decode
     * + json parse) and 7 re-derive ratings; caching them once per
     * (session, sfDir) removes the repeated scan+parse without changing any
     * semantics. Each query function still stands alone — the memo is an
@@ -57,22 +64,6 @@ object Tables {
     * long-lived multi-session service should therefore call
     * [[release]] (or `spark.catalog.clearCache()`) when done with a
     * session; short-lived apps get everything back at context shutdown. */
-  /** Sanitized sfDir + a 32-bit hash: the readable part disambiguates the
-    * common case and the hash covers paths that sanitize identically — two
-    * sfDirs collide only if BOTH agree, i.e. effectively never (the hash
-    * alone would give a 2⁻³² birthday risk per session-lifetime pair). */
-  private def memoName(sfDir: String, key: String): String = {
-    val sane = sfDir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40)
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sfDir))
-    s"graft_memo_${key}_${sane}_$h"
-  }
-
-  /** Session-scoped memo+cache for any shared derived relation: builds (and
-    * `.cache()`s) at most once per (session, sfDir, key), then resolves
-    * through the session catalog — repeat calls get the cached plan via
-    * CacheManager's canonical-plan substitution. Returns the VIEW NAME so
-    * SQL-entry queries can reference the memo by name; [[release]] drops it
-    * with the rest. */
   private[graft] def memoizedView(spark: SparkSession, sfDir: String, key: String)(
       build: => DataFrame): String = {
     val name = memoName(sfDir, key)
@@ -193,6 +184,16 @@ object Tables {
     if (df.rdd.getNumPartitions < n) df.repartition(n, key) else df
   }
 
+  /** events.ts has shipped as BOTH timestamp[ns] (read as long under the
+    * legacy flag — Spark 4 rejects ns timestamps by default,
+    * PARQUET_TYPE_ILLEGAL) and timestamp[us] (read natively as
+    * TIMESTAMP_NTZ). The loader normalizes either schema to the same
+    * contract: `ts` = long ns since epoch for exact integer arithmetic in
+    * gap/session/day-bucket queries, `tsc` = TIMESTAMP_NTZ so comparisons
+    * round-trip identically to DuckDB's naive TIMESTAMP (session TZ is UTC;
+    * no row carries sub-microsecond precision, so both directions are
+    * lossless).
+    */
   def events(spark: SparkSession, sfDir: String): DataFrame =
     memoized(spark, sfDir, "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -272,13 +273,6 @@ object Tables {
         .agg(avg("value").as("rating"))
     }
 
-  /** Ratings capped to each user's top-50 items (by 4dp-rounded rating,
-    * item tiebreak) — the similarity-computation input for user-kNN (q64).
-    * Cached like `ratings`: the pair self-join and its mirror reference
-    * this relation many times, and without caching each reference re-runs
-    * the window's shuffle+sort (measured 2× the whole query's time at
-    * sf0.1). The cap itself is the 100 TB fan-out bound — see
-    * Recommender.q64. */
   /** Spread a PAIR-FEEDING memo's cache wider than [[spreadNarrow]] would
     * (r15). capped50/contrib1024 are small relations (≤50/≤1024 rows per
     * key) whose hot consumers EXPLODE them ~2–3 orders of magnitude — the
@@ -305,6 +299,13 @@ object Tables {
     if (n <= 1) df else df.repartition(n, key)
   }
 
+  /** Ratings capped to each user's top-50 items (by 4dp-rounded rating,
+    * item tiebreak) — the similarity-computation input for user-kNN (q64).
+    * Cached like `ratings`: the pair self-join and its mirror reference
+    * this relation many times, and without caching each reference re-runs
+    * the window's shuffle+sort (measured 2× the whole query's time at
+    * sf0.1). The cap itself is the 100 TB fan-out bound — see
+    * Recommender.q64. */
   def cappedRatings(spark: SparkSession, sfDir: String): DataFrame =
     memoized(spark, sfDir, "capped50") {
       val w = org.apache.spark.sql.expressions.Window

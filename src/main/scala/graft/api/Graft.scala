@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,8 +8,19 @@ import org.apache.spark.sql.functions._
   * in `graft.operators` use, exposed as generic functions over ANY
   * DataFrame with the right columns — so a user brings their own tables,
   * not this corpus. Each function documents the plan it produces and why
-  * that plan survives a 100 TB input; the equivalence of facade and query
-  * implementations is asserted in GraftApiSpec.
+  * that plan survives a 100 TB input.
+  *
+  * The corpus keys call these facades, so the DuckDB oracle checks each
+  * one through its key — e.g. asofJoin (q17), dedupFirst (q44),
+  * chunkOverlap (q46), cosineTopK (q71), qualityScore (q79), ivfTopK
+  * (q85), packSequences (q96), bm25Rank (q100), quantizeInt (q102),
+  * rpLshBucket (q103), decontaminate (q106), cooccurrencePmiOnSupport
+  * (q107), nextTransitions (q108), tokenBudgetFill (q109), profile (q112),
+  * rollingDistinct (q121), equiDepthBuckets (q128), mannWhitneyOnSupport
+  * (q211), lorenzOnSupport (q224). The exception is [[spearman]]: q210
+  * keeps its own plan, whose y-side join strategy reads a per-corpus
+  * memoized size flag a facade has no corpus to key. GraftApiSpec and
+  * FacadeLawSpec check the facades on other inputs.
   */
 object Graft {
 
@@ -94,34 +105,51 @@ object Graft {
 
   /** As-of join: for each left row, the single latest right row with
     * `rightTs` strictly before (or at, when `strict=false`) the left row's
-    * `leftTs`, matched on `keys`. `leftId` must uniquely identify left rows.
+    * `leftTs`, matched on `keys` (right rows with a null key or timestamp
+    * never match, as in an equi join). Every left row is kept with all its
+    * columns; the match arrives as `asof_<rightTs>` and `asof_<payload>`,
+    * null when nothing qualifies.
     *
-    * Plan: theta join fans out left×matching-right, then ONE `max_by` hash
-    * aggregation picks the winner — partial aggregation collapses the
-    * fan-out map-side before the single shuffle, and nothing sorts. A
-    * row_number window here would re-shuffle AND sort the whole fan-out —
-    * the scale-killer this shape exists to avoid. Ties on `rightTs` break
-    * by the payload column order. Right columns arrive as `asof_<name>`;
-    * left rows with no match keep null payloads. */
+    * Plan: the sort-based LINEAR as-of (q17) — union the two streams per
+    * key, one per-key time-ordered ROWS window, and each left row reads
+    * the running max of struct(rightTs, payload...) over the right rows
+    * seen so far: |left| + |right| rows through one shuffle and sort. A
+    * theta join would fan every left row out to EVERY earlier right row
+    * of its key (per-key quadratic) before picking a winner. The sort key
+    * is (timestamp, tag), with right rows tagged AFTER left rows at the
+    * same instant when `strict` (an exact-instant match never qualifies)
+    * and BEFORE them otherwise; only right rows feed the max, so the
+    * order among same-instant left peers cannot move a result. The
+    * union widens the two timestamp types as a comparison would (a DATE
+    * against a TIMESTAMP_NTZ compares at midnight). Ties on `rightTs`
+    * break by the payload column order. */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-               leftTs: String, rightTs: String, leftId: Seq[String],
-               payload: Seq[String], strict: Boolean = true): DataFrame = {
-    val rts = col("__asof_rts")
-    val r = right.select(
-      keys.map(col) ++ Seq(col(rightTs).as("__asof_rts")) ++ payload.map(col): _*)
-    val lSlim = left.select((leftId ++ keys :+ leftTs).distinct.map(col): _*)
-    val cmp = if (strict) rts < col(leftTs) else rts <= col(leftTs)
-    val pickCols = rts +: payload.map(col)
-    val best = lSlim.join(r, keys).filter(cmp)
-      .groupBy(leftId.map(col): _*)
-      .agg(max_by(struct(pickCols: _*), struct(pickCols: _*)).as("__asof"))
-      .select(leftId.map(col) :+ col("__asof"): _*)
-    val renamed = (rightTs +: payload).foldLeft(
-      best.select(leftId.map(col) :+ col("__asof.*"): _*)
-        .withColumnRenamed("__asof_rts", rightTs)) {
-      (acc, c) => acc.withColumnRenamed(c, s"asof_$c")
-    }
-    left.join(renamed, leftId, "left")
+               leftTs: String, rightTs: String, payload: Seq[String],
+               strict: Boolean = true): DataFrame = {
+    val (lTag, rTag) = if (strict) (0, 1) else (1, 0)
+    // both sides shuffle as (keys, t, tag, left's other columns, picked
+    // columns), each carrying the other side's columns as typed nulls
+    val rest = left.schema.fields.filterNot(f => keys.contains(f.name))
+    val picked = (rightTs +: payload).zipWithIndex
+    val l = left.select(keys.map(col) ++
+      Seq(col(leftTs).as("__asof_t"), lit(lTag).as("__asof_tag")) ++
+      rest.map(f => col(f.name)) ++ picked.map { case (c, i) =>
+        lit(null).cast(right.schema(c).dataType).as(s"__asof_$i") }: _*)
+    val r = right.filter((keys :+ rightTs).map(col(_).isNotNull).reduce(_ && _))
+      .select(keys.map(col) ++
+        Seq(col(rightTs).as("__asof_t"), lit(rTag).as("__asof_tag")) ++
+        rest.map(f => lit(null).cast(f.dataType).as(f.name)) ++
+        picked.map { case (c, i) => col(c).as(s"__asof_$i") }: _*)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("__asof_t"), col("__asof_tag"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val best = max(when(col("__asof_tag") === rTag, struct(picked.map {
+      case (c, i) => col(s"__asof_$i").as(c) }: _*))).over(w)
+    l.union(r)
+      .withColumn("__asof_r", best)
+      .filter(col("__asof_tag") === lTag)
+      .select(left.columns.map(col) ++ picked.map { case (c, _) =>
+        col("__asof_r").getField(c).as(s"asof_$c") }: _*)
   }
 
   /** Sessionization: assign each row a per-entity session id, where a gap
@@ -167,21 +195,23 @@ object Graft {
     * consecutive buckets it contributes to, and distinct-count per target
     * bucket — volume is `window`×|id-buckets|, never |buckets|² rescans.
     * `bucketCol` must be integer-valued consecutive buckets (epoch days,
-    * hours…). Buckets beyond the observed max are clipped; the first
-    * `window−1` buckets carry a partial trailing window by construction.
-    * At extreme cardinality use per-bucket HLL sketches + trailing union
-    * instead. Returns `(bucketCol, n_distinct)`. */
+    * hours…) or a DATE (days). Returns `(bucketCol, n_distinct,
+    * n_bucket)` — the trailing-window count and the bucket's own distinct
+    * count (DAU next to WAU) — for every OBSERVED bucket: the join with
+    * the per-bucket counts clips the spilled-over tail and leaves out
+    * buckets no row falls in. The first `window−1` buckets carry a
+    * partial trailing window by construction. At extreme cardinality use
+    * per-bucket HLL sketches + trailing union instead. */
   def rollingDistinct(df: DataFrame, idCol: String, bucketCol: String,
                       window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     val ob = df.select(col(idCol), col(bucketCol)).distinct()
-    val hi = ob.agg(max(col(bucketCol)).as("__hi"))
-    ob.withColumn("__t", explode(expr(
+    val trailing = ob.withColumn("__t", explode(expr(
         s"sequence($bucketCol, $bucketCol + ${window - 1})")))
-      .crossJoin(broadcast(hi))
-      .filter(col("__t") <= col("__hi"))
-      .groupBy(col("__t").as(bucketCol))
-      .agg(countDistinct(col(idCol)).as("n_distinct"))
+      .groupBy("__t").agg(countDistinct(col(idCol)).as("n_distinct"))
+    ob.groupBy(bucketCol).agg(countDistinct(col(idCol)).as("n_bucket"))
+      .join(trailing, col(bucketCol) === col("__t"))
+      .select(col(bucketCol), col("n_distinct"), col("n_bucket"))
   }
 
   /** Equi-depth bucket assignment: `nBuckets` near-equal-count buckets via
@@ -193,8 +223,8 @@ object Graft {
   def equiDepthBuckets(df: DataFrame, valueCol: String, nBuckets: Int,
                        bucketCol: String = "bucket"): DataFrame = {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
-    val ps = (1 until nBuckets).map(i => s"${i.toDouble / nBuckets}e0").mkString(",")
-    val b = df.agg(expr(s"percentile($valueCol, array($ps))").as("__qs"))
+    val b = df.agg(
+      expr(s"percentile($valueCol, array(${cutFractions(nBuckets)}))").as("__qs"))
     df.crossJoin(broadcast(b))
       .withColumn(bucketCol,
         (lit(1) + size(expr(s"filter(__qs, q -> $valueCol > q)"))).cast("long"))
@@ -227,12 +257,9 @@ object Graft {
     // (n = Σ __c over the support — see ksStatisticOnSupport): the old
     // lazy `n1` frame was one more full count pass over the input, and
     // its broadcast crossJoin a stage round
-    val nBlk = math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
-    val ps = (1 until nBlk).map(i => s"${i.toDouble / nBlk}e0").mkString(",")
-    val row = sup.agg(
-      expr(s"approx_percentile(__k, array($ps), 10000)").as("__bnds"),
+    val row = sup.agg(blockCuts(sup, "__k")._2.as("__bnds"),
       sum("__c").as("__n")).head()
-    val bnds = if (row.isNullAt(0)) Seq.empty[Any] else row.getSeq[Any](0)
+    val bnds = cutsAt(row, 0)
     val nTot = if (row.isNullAt(1)) null else Long.box(row.getLong(1))
     val below = prefixSumWith(sup, "__k", Seq("__c"), "_cum", bnds)
       .select(col("__k"), (col("__c_cum") - col("__c")).as("__below"))
@@ -399,41 +426,46 @@ object Graft {
   /** Sequence packing: assign rows (ordered by `orderCol` within
     * `groupCol`) to fixed `budget`-token chunks by running token count —
     * the streaming-greedy packing used to build training context windows.
-    * One window per group partition, deterministic chunk ids. */
+    * One window per group partition, deterministic chunk ids. Appends
+    * `chunkCol` and the inclusive running count `cum_tokens`. */
   def packSequences(df: DataFrame, groupCol: String, orderCol: String,
                     tokenCol: String, budget: Long,
                     chunkCol: String = "chunk_id"): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__cum", sum(col(tokenCol)).over(w))
+    df.withColumn("cum_tokens", sum(col(tokenCol)).over(w))
       .withColumn(chunkCol,
-        floor((col("__cum") - col(tokenCol)) / lit(budget)).cast("long"))
-      .drop("__cum")
+        floor((col("cum_tokens") - col(tokenCol)) / lit(budget)).cast("long"))
   }
 
   /** Benchmark decontamination: rows of `corpus` sharing at least one
-    * `keyCol` value (shingle, n-gram hash, url, …) with `probe`, with the
-    * count of distinct shared keys per corpus id. The probe side is the
-    * eval suite — genuinely dimension-sized — so it broadcasts and the
-    * check is a map-side pass over the corpus key stream (the q106 shape). */
+    * `keyCol` value (shingle, n-gram hash, url, …) with `probe` — both
+    * carrying `idCol` — with the count of distinct shared keys
+    * (`n_shared`) and of distinct probe ids they touch (`n_bench`) per
+    * corpus id. The probe side is the eval suite — genuinely
+    * dimension-sized — so it broadcasts as is (both counts are distinct,
+    * so duplicate probe rows cost only broadcast bytes) and the check is a
+    * map-side pass over the corpus key stream (the q106 shape). */
   def decontaminate(corpus: DataFrame, probe: DataFrame,
                     keyCol: String, idCol: String): DataFrame =
-    corpus.join(broadcast(probe.select(keyCol).distinct()), keyCol)
+    corpus.join(broadcast(probe.select(col(idCol).as("__probe_id"), col(keyCol))),
+        keyCol)
       .groupBy(idCol)
-      .agg(countDistinct(col(keyCol)).as("n_shared"))
+      .agg(countDistinct(col(keyCol)).as("n_shared"),
+        countDistinct(col("__probe_id")).as("n_bench"))
 
-  /** Greedy token-budget fill: keep rows (ordered by `orderCol` within
+  /** Greedy token-budget fill: keep rows (ordered by `orderBy` within
     * `groupCol`) while the tokens BEFORE each row stay under `budget` — the
-    * per-domain mixture-sampling primitive (q109). Pass a content-stable
-    * hash as `orderCol` for a reproducible shuffle. Admits the one row that
-    * crosses the budget line, like [[packSequences]]. */
-  def tokenBudgetFill(df: DataFrame, groupCol: String, orderCol: String,
+    * per-domain mixture-sampling primitive (q109). Order by a
+    * content-stable hash (plus an id tiebreak) for a reproducible shuffle.
+    * Admits the one row that crosses the budget line, like
+    * [[packSequences]], and appends the running count `cum_tokens`. */
+  def tokenBudgetFill(df: DataFrame, groupCol: String, orderBy: Seq[Column],
                       tokenCol: String, budget: Long): DataFrame = {
-    val w = Window.partitionBy(groupCol).orderBy(orderCol)
+    val w = Window.partitionBy(groupCol).orderBy(orderBy: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__cum", sum(col(tokenCol)).over(w))
-      .filter(col("__cum") - col(tokenCol) < budget)
-      .drop("__cum")
+    df.withColumn("cum_tokens", sum(col(tokenCol)).over(w))
+      .filter(col("cum_tokens") - col(tokenCol) < budget)
   }
 
   /** Calendar gap-fill (dense resample): given an already-aggregated
@@ -611,14 +643,24 @@ object Graft {
     * one-row user count broadcasts (the q107 shape). */
   def cooccurrencePmi(df: DataFrame, userCol: String, itemCol: String): DataFrame = {
     val r = df.select(col(userCol).as("__u"), col(itemCol).as("__i")).distinct()
-    val n = r.agg(countDistinct(col("__u")).as("__n"))
-    val ci = r.groupBy("__i").agg(count(lit(1)).as("__c"))
-    r.select(col("__u"), col("__i").as("item_a"))
+    val pairs = r.select(col("__u"), col("__i").as("item_a"))
       .join(r.select(col("__u"), col("__i").as("item_b")), "__u")
       .filter(col("item_a") < col("item_b"))
       .groupBy("item_a", "item_b").agg(count(lit(1)).as("c_ab"))
-      .join(ci.select(col("__i").as("item_a"), col("__c").as("__ca")), "item_a")
-      .join(ci.select(col("__i").as("item_b"), col("__c").as("__cb")), "item_b")
+    cooccurrencePmiOnSupport(pairs, r, "__u", "__i")
+  }
+
+  /** [[cooccurrencePmi]] over prebuilt pair co-counts `pairs` (item_a,
+    * item_b, c_ab) of the DUPLICATE-FREE (user, item) relation `df` —
+    * exposed so a caller whose pair explosion is memoized (q107 reads
+    * `Tables.pairSupport`) pays it once. */
+  def cooccurrencePmiOnSupport(pairs: DataFrame, df: DataFrame,
+                               userCol: String, itemCol: String): DataFrame = {
+    val n = df.agg(countDistinct(col(userCol)).as("__n"))
+    val ci = df.groupBy(itemCol).agg(count(lit(1)).as("__c"))
+    pairs
+      .join(ci.select(col(itemCol).as("item_a"), col("__c").as("__ca")), "item_a")
+      .join(ci.select(col(itemCol).as("item_b"), col("__c").as("__cb")), "item_b")
       .crossJoin(broadcast(n))
       .select(col("item_a"), col("item_b"), col("c_ab"),
         log((col("c_ab") * col("__n")).cast("double") /
@@ -694,20 +736,6 @@ object Graft {
   private def rangeBlocks(df: DataFrame, orderCol: String): DataFrame =
     searchBlockLit(df, orderCol, collectBounds(df, orderCol))
 
-  /** Evaluate [[rangeBlocks]]' bounds EAGERLY: one approx_percentile job,
-    * collected to the driver (n−1 scalars — a shuffle-partition-count-sized
-    * array, driver-safe at any scale). Eager, driver-local bounds are the
-    * r15 fix for a MEASURED AQE behavior: exchange reuse never fires above
-    * a cached relation (measured r15, pinned by PlanRegressionSpec: 0
-    * ReusedExchange in every cached-input executed plan — each textually
-    * duplicated subtree re-EXECUTES with its own metrics, vs 1 ReusedExchange for the same
-    * shape over a raw parquet scan), so the old LAZY one-row bounds frame,
-    * referenced by each blocked consumer, re-ran the full input aggregation
-    * per reference (q145 at sf0.1: the fact-grain support agg executed 4×
-    * in one query). Collected once, the bounds become foldable literals:
-    * no crossJoin, no broadcast stage round, one evaluation by
-    * construction. Bound VALUES are unchanged (same sketch over the same
-    * input) and bound placement never affects results — only balance. */
   /** r15 session 2: in-session memo of collected block bounds, keyed by
     * (session identity, canonicalized-plan semanticHash, orderCol, n).
     * Every re-execution of a prefix-scan key rebuilds a structurally
@@ -735,17 +763,45 @@ object Graft {
     groupBoundsMemo.keys.filter(_._1 == id).foreach(groupBoundsMemo.remove)
   }
 
+  /** Evaluate [[rangeBlocks]]' bounds EAGERLY: one approx_percentile job,
+    * collected to the driver (n−1 scalars — a shuffle-partition-count-sized
+    * array, driver-safe at any scale). Eager, driver-local bounds are the
+    * r15 fix for a MEASURED AQE behavior: exchange reuse never fires above
+    * a cached relation (measured r15, pinned by PlanRegressionSpec: 0
+    * ReusedExchange in every cached-input executed plan — each textually
+    * duplicated subtree re-EXECUTES with its own metrics, vs 1 ReusedExchange for the same
+    * shape over a raw parquet scan), so the old LAZY one-row bounds frame,
+    * referenced by each blocked consumer, re-ran the full input aggregation
+    * per reference (q145 at sf0.1: the fact-grain support agg executed 4×
+    * in one query). Collected once, the bounds become foldable literals:
+    * no crossJoin, no broadcast stage round, one evaluation by
+    * construction. Bound VALUES are unchanged (same sketch over the same
+    * input) and bound placement never affects results — only balance. */
   private def collectBounds(df: DataFrame, orderCol: String): Seq[Any] = {
-    val n = math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
+    val (n, cuts) = blockCuts(df, orderCol)
     val key = (System.identityHashCode(df.sparkSession),
       df.queryExecution.analyzed.canonicalized.semanticHash(), orderCol, n)
-    boundsMemo.getOrElseUpdate(key, {
-      val ps = (1 until n).map(i => s"${i.toDouble / n}e0").mkString(",")
-      val row = df.agg(expr(s"approx_percentile($orderCol, array($ps), 10000)")
-        .as("__bnds")).head()
-      if (row.isNullAt(0)) Seq.empty else row.getSeq[Any](0)
-    })
+    boundsMemo.getOrElseUpdate(key, cutsAt(df.agg(cuts.as("__bnds")).head(), 0))
   }
+
+  /** The n − 1 interior cut fractions of an n-way split as SQL double
+    * literals (`0.1e0,0.2e0,…,0.9e0` for n = 10) — the argument of every
+    * percentile cut in this object. */
+  private def cutFractions(n: Int): String =
+    (1 until n).map(i => s"${i.toDouble / n}e0").mkString(",")
+
+  /** The range-block cuts of `valueCol` behind every prefix scan and rank
+    * machine: the block count n (one block per shuffle partition, at
+    * least 2) and the `approx_percentile` of the n − 1 interior bounds. */
+  private def blockCuts(df: DataFrame, valueCol: String): (Int, Column) = {
+    val n = math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
+    (n, expr(s"approx_percentile($valueCol, array(${cutFractions(n)}), 10000)"))
+  }
+
+  /** A collected cut array: an empty input's null sketch decodes to no
+    * bounds (every row then lands in block 0). */
+  private def cutsAt(row: Row, i: Int): Seq[Any] =
+    if (row.isNullAt(i)) Seq.empty else row.getSeq[Any](i)
 
   /** [[searchBlock]] against DRIVER-LOCAL bounds: the same power-of-two
     * descent, but element_at probes a FOLDABLE literal array — no
@@ -809,24 +865,6 @@ object Graft {
       .drop("__bnds" +: (0 to steps.size).map(i => s"__bs$i"): _*)
   }
 
-  /** Distributed running (prefix) sums over a totally-ordered column — the
-    * scale-safe replacement for a global `Window.orderBy(...).rowsBetween
-    * (unboundedPreceding, currentRow)`, which Spark plans as ONE partition
-    * holding the entire input. Classic two-pass prefix scan, declared in
-    * DataFrame ops: (1) bucket rows into range blocks ([[rangeBlocks]] —
-    * row-local against broadcast bounds), (2) per-block running sums via a
-    * PARTITIONED window, (3) per-block totals prefix-combined by the only
-    * remaining unpartitioned window — over ≤ `spark.sql.shuffle.partitions`
-    * rows, bounded by construction, (4) broadcast the offsets back and add
-    * row-locally. Appends `c + suffix` per value column, inclusive of the
-    * current row.
-    *
-    * `orderCol` must be numeric with DISTINCT values (group to the order
-    * grain first — the shrink-before-window discipline); with duplicates
-    * the intra-tie order would be block-placement-dependent. Determinism:
-    * integer/pinned addends regroup exactly under associativity, so block
-    * decomposition cannot change results for exact types; float callers
-    * keep the same pin discipline a global window would need. */
   /** Opt-in input validation for the prefix scans: set session conf
     * `spark.graft.validateOrder=true` to eagerly verify `orderCol` is
     * duplicate-free before building the scan. Off by default — the check is
@@ -845,6 +883,24 @@ object Graft {
           "with ties the result is block-placement-dependent")
     }
 
+  /** Distributed running (prefix) sums over a totally-ordered column — the
+    * scale-safe replacement for a global `Window.orderBy(...).rowsBetween
+    * (unboundedPreceding, currentRow)`, which Spark plans as ONE partition
+    * holding the entire input. Classic two-pass prefix scan, declared in
+    * DataFrame ops: (1) bucket rows into range blocks ([[rangeBlocks]] —
+    * row-local against broadcast bounds), (2) per-block running sums via a
+    * PARTITIONED window, (3) per-block totals prefix-combined by the only
+    * remaining unpartitioned window — over ≤ `spark.sql.shuffle.partitions`
+    * rows, bounded by construction, (4) broadcast the offsets back and add
+    * row-locally. Appends `c + suffix` per value column, inclusive of the
+    * current row.
+    *
+    * `orderCol` must be numeric with DISTINCT values (group to the order
+    * grain first — the shrink-before-window discipline); with duplicates
+    * the intra-tie order would be block-placement-dependent. Determinism:
+    * integer/pinned addends regroup exactly under associativity, so block
+    * decomposition cannot change results for exact types; float callers
+    * keep the same pin discipline a global window would need. */
   def prefixSum(df: DataFrame, orderCol: String, valueCols: Seq[String],
                 suffix: String = "_cum"): DataFrame = {
     require(valueCols.nonEmpty, "prefixSum needs at least one value column")
@@ -855,7 +911,7 @@ object Graft {
 
   /** [[prefixSum]] body over PRE-COLLECTED bounds — the shared entry for
     * facades that fold their own totals into the bounds action
-    * ([[ksStatistic]], [[lorenz]], [[ntileExact]]) so the input pays ONE
+    * ([[ksStatistic]], [[ntileExact]]) so the input pays ONE
     * eager aggregation pass instead of one per derived statistic. */
   private def prefixSumWith(df: DataFrame, orderCol: String,
       valueCols: Seq[String], suffix: String, bnds: Seq[Any]): DataFrame = {
@@ -924,8 +980,7 @@ object Graft {
         s"groupedPrefixSum: ($orderCol) has duplicates within a group " +
           s"(${r.getLong(0)} rows, ${r.getLong(1)} distinct keys)")
     }
-    val n = math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
-    val ps = (1 until n).map(i => s"${i.toDouble / n}e0").mkString(",")
+    val (n, cuts) = blockCuts(df, orderCol)
     val gc = groupCols.map(col)
     // group-key joins below are null-safe (<=>): a NULL group key is a
     // group of its own, exactly as Window.partitionBy treats it — a
@@ -936,9 +991,7 @@ object Graft {
     // plan as a driver-local relation: AQE exchange reuse never fires above
     // a cached relation (see collectBounds), so the old lazy bounds agg
     // re-ran the full input aggregation once per blocked consumer.
-    val boundsAgg = df.groupBy(gc: _*)
-      .agg(expr(s"approx_percentile($orderCol, array($ps), 10000)")
-        .as("__bnds"))
+    val boundsAgg = df.groupBy(gc: _*).agg(cuts.as("__bnds"))
     // per-group bounds memoized like [[collectBounds]] (same key shape,
     // same balance-only invariant; Rows are plain values)
     val bKey = (System.identityHashCode(df.sparkSession),
@@ -1046,12 +1099,9 @@ object Graft {
     * broadcast crossJoin disappear, and the support is evaluated one time
     * fewer. Values are bit-identical — same addends, same divisions. */
   def ksStatisticOnSupport(pv: DataFrame): DataFrame = {
-    val n = math.max(2, pv.sparkSession.sessionState.conf.numShufflePartitions)
-    val ps = (1 until n).map(i => s"${i.toDouble / n}e0").mkString(",")
-    val row = pv.agg(
-      expr(s"approx_percentile(__v, array($ps), 10000)").as("__bnds"),
+    val row = pv.agg(blockCuts(pv, "__v")._2.as("__bnds"),
       sum("__c1").as("n_a"), sum("__c2").as("n_b")).head()
-    val bnds = if (row.isNullAt(0)) Seq.empty[Any] else row.getSeq[Any](0)
+    val bnds = cutsAt(row, 0)
     val nA = if (row.isNullAt(1)) null else Long.box(row.getLong(1))
     val nB = if (row.isNullAt(2)) null else Long.box(row.getLong(2))
     prefixSumWith(pv, "__v", Seq("__c1", "__c2"), "_cum", bnds)
@@ -1088,7 +1138,10 @@ object Graft {
       .agg(sum(when(col(groupCol) === a, 1L).otherwise(0L)).as("__ca"),
         count(lit(1)).as("__t"))
 
-  /** [[mannWhitney]] over a prebuilt [[mwSupport]] relation. */
+  /** [[mannWhitney]] over a prebuilt [[mwSupport]] relation. `z` is null
+    * (never 0/0) when the variance term vanishes — an empty arm or a
+    * single-valued support — or the tie correction's N(N−1) does (a
+    * one-unit input). */
   def mannWhitneyOnSupport(grain: DataFrame): DataFrame = {
     val ranked = prefixSum(grain, "__v", Seq("__t"))
       .withColumn("__fr", (col("__t_cum") - col("__t")).cast("double") +
@@ -1106,10 +1159,11 @@ object Graft {
         (col("__ra") - col("n_a") * (col("n_a") + 1) / lit(2.0)).as("u_a"),
         (((col("__ra") - col("n_a") * (col("n_a") + 1) / lit(2.0)) -
             col("n_a") * col("n_b") / lit(2.0)) /
-          sqrt(col("n_a") * col("n_b") / lit(12.0) *
+          nullif(sqrt(col("n_a") * col("n_b") / lit(12.0) *
             (((col("n_a") + col("n_b")).cast("double") + 1) -
-              col("__tie3") / ((col("n_a") + col("n_b")).cast("double") *
-                ((col("n_a") + col("n_b")).cast("double") - 1))))).as("z"))
+              col("__tie3") / nullif((col("n_a") + col("n_b")).cast("double") *
+                ((col("n_a") + col("n_b")).cast("double") - 1), lit(0.0)))),
+            lit(0.0))).as("z"))
   }
 
   /** Spearman rank correlation of `xCol` vs `yCol` per group: one row per
@@ -1161,24 +1215,31 @@ object Graft {
     * leaves that decile without a boundary row (reported as observed).
     * Pin `valueCol` to a rounding grid first when comparing across
     * engines. */
-  def lorenz(df: DataFrame, valueCol: String): DataFrame = {
-    val grain = df.groupBy(col(valueCol).as("__v"))
+  def lorenz(df: DataFrame, valueCol: String): DataFrame =
+    lorenzOnSupport(lorenzSupport(df, valueCol))
+
+  /** The (value, count, value·count) SUPPORT grain [[lorenz]] scans —
+    * exposed for caller-side memoization exactly like [[ksSupport]] (the
+    * scan and the totals reference it four times, and AQE never
+    * deduplicates those references above a cached relation). Schema:
+    * (__v, __c, __rc). */
+  def lorenzSupport(df: DataFrame, valueCol: String): DataFrame =
+    df.groupBy(col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__c"))
       .withColumn("__rc", col("__v") * col("__c"))
-    // totals ride the SAME eager job as the block bounds (see
-    // ksStatisticOnSupport): the old lazy `tot` frame was one more full
-    // evaluation of the grain, and its broadcast crossJoin a stage round
-    val n = math.max(2, df.sparkSession.sessionState.conf.numShufflePartitions)
-    val ps = (1 until n).map(i => s"${i.toDouble / n}e0").mkString(",")
-    val row = grain.agg(
-      expr(s"approx_percentile(__v, array($ps), 10000)").as("__bnds"),
-      sum("__c").as("__nc"), sum("__rc").as("__tr")).head()
-    val bnds = if (row.isNullAt(0)) Seq.empty[Any] else row.getSeq[Any](0)
-    val nc = if (row.isNullAt(1)) null else Long.box(row.getLong(1))
-    val tr = if (row.isNullAt(2)) null else row.get(2)
-    prefixSumWith(grain, "__v", Seq("__c", "__rc"), "_cum", bnds)
-      .withColumn("__f", col("__c_cum").cast("double") / lit(nc).cast("double"))
-      .withColumn("__s", col("__rc_cum") / lit(tr))
+
+  /** [[lorenz]] over a prebuilt [[lorenzSupport]] relation. The block
+    * bounds come from [[prefixSum]]'s session-memoized eager bounds job,
+    * so a repeated construction over the same support runs no Spark job;
+    * the two totals stay a lazy one-row aggregate broadcast beside the
+    * scan (totals are VALUES, so unlike bounds they must never be served
+    * from a memo that could outlive its input). */
+  def lorenzOnSupport(grain: DataFrame): DataFrame = {
+    val tot = grain.agg(sum("__c").as("__nc"), sum("__rc").as("__tr"))
+    prefixSum(grain, "__v", Seq("__c", "__rc"))
+      .crossJoin(broadcast(tot))
+      .withColumn("__f", col("__c_cum").cast("double") / col("__nc").cast("double"))
+      .withColumn("__s", col("__rc_cum") / col("__tr"))
       .withColumn("decile", ceil(col("__f") * lit(10.0)).cast("long"))
       .groupBy("decile")
       .agg(max("__f").as("cum_population"), max("__s").as("cum_value"))
@@ -1317,18 +1378,6 @@ object Graft {
         expr(s"slice($arrCol, cast($idxCol * $stride + 1 as int), $chunkSize)"))
   }
 
-  /** Connected components over a bipartite membership relation
-    * `(idCol, bucketCol)`: two ids are connected when they share any
-    * bucket. Returns `(idCol, component)` where component = min id of the
-    * cluster. Min-label propagation to the EXACT fixpoint (driver-side
-    * convergence check, `maxRounds` as a runaway bound). From the third
-    * round on — i.e. only when plain propagation hasn't already converged,
-    * which it does for the star-shaped clusters dedup produces — each round
-    * adds a POINTER-JUMPING step, label(x) ← label(label(x)), which
-    * compresses chain-shaped clusters exponentially, so a diameter-D
-    * component converges in O(log D) rounds instead of D. Membership stays
-    * linear in the input — never a pairwise edge list, which is quadratic
-    * per bucket at 100 TB. */
   /** Release a localCheckpoint's block-manager residents. `Dataset
     * .unpersist` only covers CacheManager entries — an eager checkpoint's
     * data lives as RDD storage blocks, reachable only through the plan's
@@ -1343,6 +1392,18 @@ object Graft {
       case _ => ()
     }
 
+  /** Connected components over a bipartite membership relation
+    * `(idCol, bucketCol)`: two ids are connected when they share any
+    * bucket. Returns `(idCol, component)` where component = min id of the
+    * cluster. Min-label propagation to the EXACT fixpoint (driver-side
+    * convergence check, `maxRounds` as a runaway bound). From the third
+    * round on — i.e. only when plain propagation hasn't already converged,
+    * which it does for the star-shaped clusters dedup produces — each round
+    * adds a POINTER-JUMPING step, label(x) ← label(label(x)), which
+    * compresses chain-shaped clusters exponentially, so a diameter-D
+    * component converges in O(log D) rounds instead of D. Membership stays
+    * linear in the input — never a pairwise edge list, which is quadratic
+    * per bucket at 100 TB. */
   def connectedComponents(mem: DataFrame, idCol: String, bucketCol: String,
                           maxRounds: Int = 50): DataFrame = {
     val m = mem.select(col(idCol), col(bucketCol).as("__bucket")).cache()
@@ -1402,7 +1463,10 @@ object Graft {
     * assignment is already materialized in the corpus); the search join is
     * an equi join on the cell id, so candidate generation is cell-local
     * instead of corpus-wide. Approximate: a true neighbor in another cell
-    * is missed — recall rises with finer/overlapping cells. */
+    * is missed — recall rises with finer/overlapping cells. Routing and
+    * ranking both order on the cosine pinned to 5 dp (ties by cell / id —
+    * the q85 form), so two engines whose cosines differ in the last ulp
+    * pick the same cell and neighbors; `cos` is returned unpinned. */
   def ivfTopK(corpus: DataFrame, centroids: DataFrame, probes: DataFrame, k: Int,
               corpusId: String = "id", corpusVec: String = "vec", cellCol: String = "cell",
               centroidVec: String = "cvec",
@@ -1412,14 +1476,14 @@ object Graft {
       .crossJoin(broadcast(centroids.select(col(cellCol), col(centroidVec))))
       .withColumn("__ccos", expr(s"cosine_sim($probeVec, $centroidVec)"))
       .transform(df => topKPerGroup(df, Seq(probeId),
-        Seq(col("__ccos").desc, col(cellCol)), 1, "__crn"))
+        Seq(graft.Tables.r5(col("__ccos")).desc, col(cellCol)), 1, "__crn"))
       .select(col(probeId), col(probeVec), col(cellCol))
     corpus.select(col(corpusId), col(corpusVec), col(cellCol))
       .join(broadcast(routed), cellCol)
       .filter(col(corpusId) =!= col(probeId))
       .withColumn("cos", expr(s"cosine_sim($probeVec, $corpusVec)"))
       .transform(df => topKPerGroup(df, Seq(probeId),
-        Seq(col("cos").desc, col(corpusId)), k))
+        Seq(graft.Tables.r5(col("cos")).desc, col(corpusId)), k))
       .select(col(probeId), col(cellCol), col("rank"), col(corpusId), col("cos"))
   }
 
@@ -1428,8 +1492,10 @@ object Graft {
     * broadcast — the corpus streams map-side, so the scan is linear and
     * shuffle-free until the per-probe top-k. Vectors must be
     * `array<double>`; similarity is the native codegen'd `cosine_sim`.
-    * For corpus×corpus near-dup joins use the IVF/banded paths instead
-    * (q85 / SimilarityBandRewrite). */
+    * Neighbors rank on the cosine pinned to 5 dp, ties by corpus id (the
+    * q71 form — engine-stable at the last ulp); `cos` is returned
+    * unpinned. For corpus×corpus near-dup joins use the IVF/banded paths
+    * instead (q85 / SimilarityBandRewrite). */
   def cosineTopK(corpus: DataFrame, probes: DataFrame, k: Int,
                  corpusId: String = "id", corpusVec: String = "vec",
                  probeId: String = "probe_id", probeVec: String = "probe_vec"): DataFrame = {
@@ -1439,7 +1505,7 @@ object Graft {
       .filter(col(corpusId) =!= col(probeId))
       .withColumn("cos", expr(s"cosine_sim($probeVec, $corpusVec)"))
       .transform(df => topKPerGroup(df, Seq(probeId),
-        Seq(col("cos").desc, col(corpusId)), k))
+        Seq(graft.Tables.r5(col("cos")).desc, col(corpusId)), k))
       .select(col(probeId), col("rank"), col(corpusId), col("cos"))
   }
 
@@ -1453,7 +1519,8 @@ object Graft {
     * per-term scores are summed in the FIXED order of `query` via
     * conditional aggregation — a bare sum(score) would make the result
     * depend on IEEE addition order. Returns `(idCol, n_terms, score)`,
-    * top `topK` by (score desc, idCol). */
+    * top `topK` by (score pinned to 4 dp desc, idCol) — the q100 ranking,
+    * engine-stable at the last ulp; `score` is returned unpinned. */
   def bm25Rank(tokens: DataFrame, docLens: DataFrame, idCol: String,
                termCol: String, lenCol: String, query: Seq[String],
                k1: Double = 1.2, b: Double = 0.75, topK: Int = 20): DataFrame = {
@@ -1473,7 +1540,7 @@ object Graft {
       .agg(count(lit(1)).as("n_terms"),
         query.map(t => coalesce(sum(when(col(termCol) === t, col("__s"))), lit(0.0)))
           .reduce(_ + _).as("score"))
-      .orderBy(col("score").desc, col(idCol)).limit(topK)
+      .orderBy(graft.Tables.r4(col("score")).desc, col(idCol)).limit(topK)
   }
 
   /** Symmetric integer quantization of an `array<double>` column: per-row
@@ -1496,18 +1563,28 @@ object Graft {
   /** The q79 [0,1] text-quality heuristic as a single reusable column
     * expression (length, punctuation and stopword ratios combined) — usable
     * in BATCH and STREAMING plans alike since it is fully row-local; all
-    * ratios are exact int/int divisions. GraftApiSpec asserts it matches
-    * the oracle-verified q79 score exactly. */
-  def qualityScore(text: Column): Column = {
-    val words = filter(split(lower(text), " "), w => w =!= "")
-    val nWords = size(words)
-    val punct = length(regexp_replace(text, "[a-z0-9 ]", ""))
-      .cast("double") / length(text)
-    val stops = size(filter(words,
-      w => w.isin("the", "a", "of", "in", "and", "to"))).cast("double") / nWords
-    least(lit(1.0), nWords / lit(100.0)) * (lit(1.0) - punct) *
-      (lit(0.5) + least(lit(0.5), stops * lit(5.0)))
-  }
+    * ratios are exact int/int divisions, and an empty text (or one with
+    * no words) scores null, never a division by zero. Splits `text` into
+    * lower-cased words on single spaces, empties dropped. */
+  def qualityScore(text: Column): Column =
+    qualityScore(text, filter(split(lower(text), " "), w => w =!= ""))
+
+  /** [[qualityScore]] over an already-split `words` array (lower-cased,
+    * empties dropped) — q79 reads its cached word arrays instead of
+    * re-splitting the text. */
+  def qualityScore(text: Column, words: Column): Column =
+    least(lit(1.0), size(words) / lit(100.0)) * (lit(1.0) - punctRatio(text)) *
+      (lit(0.5) + least(lit(0.5), stopwordRatio(words) * lit(5.0)))
+
+  /** Share of `text`'s characters outside [a-z0-9 ]; null on an empty text. */
+  private[graft] def punctRatio(text: Column): Column =
+    length(regexp_replace(text, "[a-z0-9 ]", "")).cast("double") /
+      nullif(length(text).cast("double"), lit(0.0))
+
+  /** Share of `words` in the six-word stopword list; null with no words. */
+  private[graft] def stopwordRatio(words: Column): Column =
+    size(filter(words, w => w.isin("the", "a", "of", "in", "and", "to")))
+      .cast("double") / nullif(size(words).cast("double"), lit(0.0))
 
   /** Signed-random-projection LSH bucket for an `array` vector column:
     * `nPlanes` hyperplanes whose ±1 signs derive from sha256(plane, dim) —

@@ -199,28 +199,23 @@ object Aggregates {
   }
 
   /** Equi-DEPTH histogram (q45's equal-count companion) the scalable way:
-    * decile boundaries from ONE exact `percentile` aggregation (a one-row
-    * broadcast), bucket assignment as a row-local comparison count against
-    * the broadcast array, then an ordinary keyed count — NEVER the naive
+    * [[graft.api.Graft.equiDepthBuckets]] — decile boundaries from ONE
+    * exact `percentile` aggregation (a one-row broadcast), bucket
+    * assignment as a row-local comparison count against the broadcast
+    * array — then an ordinary keyed count, NEVER the naive
     * `ntile` global window, which funnels the entire fact table through a
     * single partition. At extreme scale swap the exact percentile for the
     * mergeable `approx_percentile` (q59). Boundary determinism: both
     * engines interpolate the same deciles and money values are ≥ 0.01
     * apart, so a 1-ulp interpolation difference can never flip a
     * `v > bound` comparison. */
-  def q128(s: SparkSession, d: String): DataFrame = {
-    val b = orders(s, d).agg(expr(
-      "percentile(o_totalprice, array(0.1e0,0.2e0,0.3e0,0.4e0,0.5e0,0.6e0,0.7e0,0.8e0,0.9e0))")
-      .as("qs"))
-    orders(s, d).crossJoin(broadcast(b))
-      .withColumn("bucket",
-        (lit(1) + size(expr("filter(qs, q -> o_totalprice > q)"))).cast("long"))
+  def q128(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.equiDepthBuckets(orders(s, d), "o_totalprice", 10)
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
         r2(min(col("o_totalprice"))).as("lo"),
         r2(max(col("o_totalprice"))).as("hi"))
       .orderBy("bucket")
-  }
 
   /** Equi-width histogram via an explicit bucket formula (DuckDB 1.0 has no
     * width_bucket); min/max come from a 1-row broadcast aggregate, so the

@@ -57,27 +57,13 @@ object Analytics {
     * 100 TB. The wide one-row result is reshaped to long with `stack`
     * (row-local, no shuffle). At extreme cardinalities swap the exact
     * distinct for `approx_count_distinct` (HLL, fixed state). */
-  def q112(s: SparkSession, d: String): DataFrame = {
-    val wide = customer(s, d).agg(
-      count(lit(1)).as("n_rows"),
-      count(col("c_custkey")).as("nn1"), countDistinct(col("c_custkey")).as("nd1"),
-      min(col("c_custkey")).cast("double").as("mn1"), max(col("c_custkey")).cast("double").as("mx1"),
-      count(col("c_name")).as("nn2"), countDistinct(col("c_name")).as("nd2"),
-      count(col("c_nationkey")).as("nn3"), countDistinct(col("c_nationkey")).as("nd3"),
-      min(col("c_nationkey")).cast("double").as("mn3"), max(col("c_nationkey")).cast("double").as("mx3"),
-      count(col("c_acctbal")).as("nn4"), countDistinct(col("c_acctbal")).as("nd4"),
-      r2(min(col("c_acctbal"))).as("mn4"), r2(max(col("c_acctbal"))).as("mx4"),
-      count(col("c_mktsegment")).as("nn5"), countDistinct(col("c_mktsegment")).as("nd5"))
-    wide.selectExpr("n_rows", s"""stack(5,
-        'c_acctbal',   nn4, nd4, mn4, mx4,
-        'c_custkey',   nn1, nd1, mn1, mx1,
-        'c_mktsegment',nn5, nd5, cast(null as double), cast(null as double),
-        'c_name',      nn2, nd2, cast(null as double), cast(null as double),
-        'c_nationkey', nn3, nd3, mn3, mx3) AS (column_name, n_nonnull, n_distinct, min_v, max_v)""")
+  def q112(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.profile(customer(s, d),
+        Seq("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
+      // min/max pin at the output edge: the 2 dp pin is the identity on the
+      // integer columns' doubles and on null (string columns)
       .select(col("column_name"), col("n_rows"), col("n_nonnull"),
-        col("n_distinct"), col("min_v"), col("max_v"))
-      .orderBy("column_name")
-  }
+        col("n_distinct"), r2(col("min_v")).as("min_v"), r2(col("max_v")).as("max_v"))
 
   /** Per-group z-score outlier detection (robust filtering before training):
     * event values scored against their event_type's mean/stddev, top-20 by
@@ -207,19 +193,15 @@ object Analytics {
     * (shorter) trailing window by construction. At extreme cardinality the
     * sketch path is `hll_sketch_agg` per day + `hll_union_agg` over the
     * trailing week (mergeability demonstrated in MlSpec). */
-  def q121(s: SparkSession, d: String): DataFrame = {
-    val ud = events(s, d)
-      .select(col("user_id"), to_date(col("tsc")).as("day")).distinct()
-    val wau = ud
-      .withColumn("t", explode(expr("sequence(day, date_add(day, 6))")))
-      .groupBy("t").agg(countDistinct(col("user_id")).as("wau_7d"))
-    ud.groupBy("day").agg(countDistinct(col("user_id")).as("dau"))
-      .join(wau, col("day") === col("t")) // inner join clips the spilled-over tail days
+  def q121(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.rollingDistinct(
+        events(s, d).select(col("user_id"), to_date(col("tsc")).as("day")),
+        "user_id", "day", 7)
       // raw DATE output kinds differ across the driver's readers (q51
       // precedent) — ship the day as a naive midnight timestamp instead
-      .select(col("day").cast("timestamp_ntz").as("day"), col("dau"), col("wau_7d"))
+      .select(col("day").cast("timestamp_ntz").as("day"),
+        col("n_bucket").as("dau"), col("n_distinct").as("wau_7d"))
       .orderBy("day")
-  }
 
   /** MAD robust outliers — the heavy-tail-safe companion to q116's z-score
     * (mean and stddev are themselves corrupted by the outliers they are
@@ -1052,34 +1034,17 @@ object Analytics {
     // uncached, the two fact-grain aggs (user spend, value grain) re-ran
     // per reference. Memo+cached once per session (the q145/q149 pattern).
     val grain = graft.Tables.memoized(s, d, "mwSpendSup") {
-      val spend = events(s, d).filter(col("event_type") === "purchase")
-        .groupBy("user_id").agg(r2(sum("value")).as("y"))
-        .withColumn("in_a", graft.api.Graft.hashBucket(col("user_id"), 2) === 0)
-      spend.groupBy("y").agg(
-        sum(when(col("in_a"), 1L).otherwise(0L)).as("ca"),
-        count(lit(1)).as("t"))
+      graft.api.Graft.mwSupport(
+        events(s, d).filter(col("event_type") === "purchase")
+          .groupBy("user_id").agg(r2(sum("value")).as("y"))
+          .withColumn("arm",
+            when(graft.api.Graft.hashBucket(col("user_id"), 2) === 0, "A").otherwise("B")),
+        "y", "arm", "A", "B")
     }
-    val ranked = graft.api.Graft.prefixSum(grain, "y", Seq("t"))
-      .withColumn("fr", (col("t_cum") - col("t")).cast("double") +
-        (col("t") + 1).cast("double") / lit(2.0))
-    ranked.agg(
-      sum("ca").as("n_a"), sum(col("t") - col("ca")).as("n_b"),
-      sum(col("ca") * col("fr")).as("r_a"),
-      // double tie cube (see Graft.mannWhitney): LONG t³ overflows past
-      // ~2.09M rows on one tied value; exact below 2^53 either way
-      sum(col("t").cast("double") * col("t") * col("t") - col("t")).as("tie3"))
-      .select(col("n_a"), col("n_b"),
-        r2(col("r_a") - col("n_a") * (col("n_a") + 1) / lit(2.0)).as("u_a"),
-        // nullif twice: an empty arm or an all-one-value corpus zeroes
-        // the variance term, and a single-user corpus zeroes the tie
-        // correction's N(N-1) — null z in both engines, never 0/0
-        r4(((col("r_a") - col("n_a") * (col("n_a") + 1) / lit(2.0)) -
-            col("n_a") * col("n_b") / lit(2.0)) /
-          nullif(sqrt(col("n_a") * col("n_b") / lit(12.0) *
-            (((col("n_a") + col("n_b")).cast("double") + 1) -
-              col("tie3") / nullif((col("n_a") + col("n_b")).cast("double") *
-                ((col("n_a") + col("n_b")).cast("double") - 1), lit(0.0)))),
-            lit(0.0))).as("z"))
+    // z is null (never 0/0) on an empty arm, a one-value corpus or a
+    // single-user corpus — in both engines
+    graft.api.Graft.mannWhitneyOnSupport(grain)
+      .select(col("n_a"), col("n_b"), r2(col("u_a")).as("u_a"), r4(col("z")).as("z"))
   }
 
   /** Autocorrelation function of daily revenue at lags 1–7 — the
@@ -1276,24 +1241,16 @@ object Analytics {
     // r15 session 2: the revenue-grain support is ≤|customers| rows but
     // its build is two orders-grain hash aggs, and the plan references it
     // FOUR times (prefixSum's blocked rows + block totals, the eager
-    // bounds job, and the `tot` aggregation below) with AQE never
+    // bounds job, and lorenzOnSupport's totals) with AQE never
     // deduplicating above a cached relation — memo+cached once per
     // session (the q145/q149 pattern).
     val grain = graft.Tables.memoized(s, d, "lorenzGrain") {
-      orders(s, d).groupBy("o_custkey")
-        .agg(r2(sum("o_totalprice")).as("rev"))
-        .groupBy("rev").agg(count(lit(1)).as("c"))
-        .withColumn("rc", col("rev") * col("c"))
+      graft.api.Graft.lorenzSupport(orders(s, d).groupBy("o_custkey")
+        .agg(r2(sum("o_totalprice")).as("rev")), "rev")
     }
-    val cum = graft.api.Graft.prefixSum(grain, "rev", Seq("c", "rc"))
-    val tot = grain.agg(sum("c").as("nc"), sum("rc").as("tr"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("f", col("c_cum").cast("double") / col("nc").cast("double"))
-      .withColumn("sh", col("rc_cum") / col("tr"))
-      .withColumn("decile", ceil(col("f") * lit(10.0)).cast("long"))
-      .groupBy("decile")
-      .agg(r4(max("f")).as("cum_customers"), r4(max("sh")).as("cum_revenue"))
-      .orderBy("decile")
+    graft.api.Graft.lorenzOnSupport(grain)
+      .select(col("decile"), r4(col("cum_population")).as("cum_customers"),
+        r4(col("cum_value")).as("cum_revenue"))
   }
 
   /** Burstiness coefficient per event type: Goh–Barabási

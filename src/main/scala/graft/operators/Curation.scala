@@ -204,13 +204,8 @@ object Curation {
     * corpus shingle stream. Reuses the [[TextPipeline.shingles5]] memo. */
   def q106(s: SparkSession, d: String): DataFrame = {
     val sh = TextPipeline.shingles5(s, d)
-    val bench = sh.filter(col("doc_id") < 10)
-      .select(col("doc_id").as("bench_id"), col("sh"))
-    sh.filter(col("doc_id") >= 10)
-      .join(broadcast(bench), "sh")
-      .groupBy("doc_id")
-      .agg(countDistinct(col("sh")).as("n_shared"),
-        countDistinct(col("bench_id")).as("n_bench"))
+    graft.api.Graft.decontaminate(sh.filter(col("doc_id") >= 10),
+        sh.filter(col("doc_id") < 10), "sh", "doc_id")
       .orderBy("doc_id")
   }
 
@@ -222,34 +217,25 @@ object Curation {
     * stable across engines/partitionings, same discipline as q94); the
     * greedy fill admits the doc that crosses the budget line, like q96's
     * packer. One window per source partition; linear. */
-  def q109(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("hb", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    documents(s, d)
-      .select(col("doc_id"), col("source"),
-        regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens"),
-        substring(sha2(col("doc_id").cast("string"), 256), 1, 8).as("hb"))
-      .withColumn("cum_tokens", sum("tokens").over(w))
-      .filter(col("cum_tokens") - col("tokens") < lit(1024L))
+  def q109(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.tokenBudgetFill(
+        documents(s, d).select(col("doc_id"), col("source"),
+          regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens"),
+          substring(sha2(col("doc_id").cast("string"), 256), 1, 8).as("hb")),
+        "source", Seq(col("hb"), col("doc_id")), "tokens", 1024L)
       .select("source", "doc_id", "hb", "tokens", "cum_tokens")
       .orderBy("source", "doc_id")
-  }
 
   /** Sequence packing: assign docs (ordered by doc_id within source) to
     * fixed 2048-token training chunks by running token count; a doc's chunk
     * is floor(tokens-before-it / 2048) — the streaming-greedy packing. */
-  def q96(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    documents(s, d)
-      .select(col("doc_id"), col("source"),
-        regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens"))
-      .withColumn("cum_tokens", sum("tokens").over(w))
-      .withColumn("chunk_id",
-        floor((col("cum_tokens") - col("tokens")) / lit(2048)).cast("long"))
+  def q96(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.packSequences(
+        documents(s, d).select(col("doc_id"), col("source"),
+          regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens")),
+        "source", "doc_id", "tokens", 2048L)
       .select("source", "chunk_id", "doc_id", "tokens", "cum_tokens")
       .orderBy("source", "doc_id")
-  }
 
   /** Overlapping fixed-size chunking (the RAG / training-window shape):
     * 64-word chunks at stride 48 (16-word overlap), one output row per
@@ -257,15 +243,10 @@ object Curation {
     * come from a per-doc `sequence` explode — fan-out is len/stride, no
     * join, no shuffle beyond the final order. */
   def q46(s: SparkSession, d: String): DataFrame =
-    TextPipeline.docWords(s, d)
-      .filter(size(col("words")) >= 1)
-      .select(col("doc_id"), col("words"),
-        explode(expr("sequence(0L, (size(words) - 1) div 48)")).as("chunk_idx"))
+    graft.api.Graft.chunkOverlap(TextPipeline.docWords(s, d), "words", 64, 48)
       .select(col("doc_id"), col("chunk_idx"),
-        least(lit(64), size(col("words")) - col("chunk_idx") * 48)
-          .cast("long").as("n_chunk_words"),
-        sha2(expr("array_join(slice(words, cast(chunk_idx * 48 + 1 as int), 64), ' ')"),
-          256).as("chunk_sha"))
+        size(col("chunk")).cast("long").as("n_chunk_words"),
+        sha2(array_join(col("chunk"), " "), 256).as("chunk_sha"))
       .orderBy("doc_id", "chunk_idx")
 
   /** Identifier/PII scrubbing: redact digit-run identifiers (≥4 digits) in

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** §2.3 join matrix: broadcast, shuffle 3-way, outer, semi/anti, theta, as-of,
@@ -11,9 +10,8 @@ import org.apache.spark.sql.functions._
   * Scale notes: dims (region/nation/customer/supplier/part) stay far below
   * `spark.sql.autoBroadcastJoinThreshold` even at 100 TB fact scale, and the
   * small sides are broadcast explicitly where the optimizer might lack stats.
-  * The as-of join (q17) is expressed as theta-join + windowed top-1, which
-  * shuffles once on the join key and once on the window key — both
-  * hash-partitionable by user, saltable on skew.
+  * The as-of join (q17) is a union of both streams under one per-user
+  * time-ordered window — one shuffle on the user key, saltable on skew.
   */
 object Joins {
 
@@ -78,54 +76,22 @@ object Joins {
   /** As-of: per event, the user's latest order strictly before the event time.
     * (user_id ⊆ c_custkey domain and all orders predate all events — verified.)
     *
-    * Scale design (r15 session 2): the sort-based LINEAR as-of — union the
-    * two streams per user (orders tagged to sort AFTER events at the same
-    * instant, because the match is STRICT `<`), one per-user time-ordered
-    * window, and each event row reads the running max of struct(o_orderdate,
-    * o_orderkey) over the orders seen so far. Work is |events|+|orders| rows
-    * through one shuffle+sort — the previous theta-join form fanned every
-    * event out to EVERY prior order of its user (per-user quadratic: 15M
-    * intermediate rows from 250k inputs at sf0.1, and the fan-out grows with
-    * density² at 100 TB) before a max_by aggregation collapsed it (guide
-    * §1.2 step 1: fix the algorithm, not the operator). The round-1 version
-    * windowed the FAN-OUT by event_id — worse still. Equivalence: max over
-    * struct(o_orderdate, o_orderkey) picks the same (date, key) the old
-    * max_by tiebreak did (o_orderkey unique ⇒ total order); DATE promotes
-    * to TIMESTAMP_NTZ midnight in both the old `<` and the union's sort
-    * key, and the event-first tag keeps the strict-inequality edge: an
-    * order at exactly the event instant never qualifies. Events with no
-    * prior order carry a null running max and are dropped, exactly as the
-    * inner join dropped them. */
+    * The sort-based LINEAR as-of of [[graft.api.Graft.asofJoin]] (r15): a
+    * theta join fanned every event out to EVERY prior order of its user
+    * (15M intermediate rows from 250k inputs at sf0.1). The match is the
+    * max of (o_orderdate, o_orderkey) — o_orderkey unique ⇒ a total order.
+    * Events with no prior order are dropped, as the oracle's inner join
+    * drops them. */
   def q17(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).select("event_id", "user_id", "tsc")
     val o = orders(s, d).select(col("o_custkey").as("user_id"),
       col("o_orderkey"), col("o_orderdate"))
-    val evPart = ev.select(col("user_id"), col("tsc").as("__t"),
-      lit(0).as("__tag"), col("event_id"), col("tsc"),
-      lit(null).cast(o.schema("o_orderkey").dataType).as("o_orderkey"),
-      lit(null).cast(o.schema("o_orderdate").dataType).as("o_orderdate"))
-    val oPart = o.select(col("user_id"),
-      col("o_orderdate").cast(ev.schema("tsc").dataType).as("__t"),
-      lit(1).as("__tag"),
-      lit(null).cast(ev.schema("event_id").dataType).as("event_id"),
-      lit(null).cast(ev.schema("tsc").dataType).as("tsc"),
-      col("o_orderkey"), col("o_orderdate"))
-    // ROWS frame over (t, tag): every row with a strictly smaller sort key
-    // precedes the current row, so an event's frame holds ALL its user's
-    // qualifying orders; its same-instant peers are only other EVENTS
-    // (null structs — max ignores them), so peer-order nondeterminism
-    // cannot move the result. max over structs is order-insensitive.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("__t"), col("__tag"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    evPart.unionByName(oPart)
-      .withColumn("best", max(when(col("__tag") === 1,
-        struct(col("o_orderdate").as("d"), col("o_orderkey").as("k")))).over(w))
-      .filter(col("__tag") === 0 && col("best").isNotNull)
+    graft.api.Graft.asofJoin(ev, o, Seq("user_id"), "tsc", "o_orderdate",
+        Seq("o_orderkey"))
+      .filter(col("asof_o_orderdate").isNotNull)
       .select(col("event_id"), col("user_id"), col("tsc"),
-        col("best.k").as("o_orderkey"),
-        col("best.d").as("o_orderdate"))
+        col("asof_o_orderkey").as("o_orderkey"),
+        col("asof_o_orderdate").as("o_orderdate"))
       .orderBy("event_id")
   }
 

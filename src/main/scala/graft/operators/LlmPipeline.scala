@@ -64,24 +64,20 @@ object LlmPipeline {
   }
 
   /** Similarity search: top-5 cosine neighbors for the 10 probe vectors
-    * (vec_id < 10), brute-force against the full corpus; probes broadcast.
-    * The cosine itself is the native codegen'd [[graft.plans.CosineSim]]
+    * (vec_id < 10), brute-force against the full corpus; probes broadcast
+    * ([[graft.api.Graft.cosineTopK]], ranked on the 5 dp cosine). The
+    * cosine itself is the native codegen'd [[graft.plans.CosineSim]]
     * expression — one fused loop per pair instead of three HOF passes. */
   def q71(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val e = embeddings(s, d)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("p"))
-    e.select(col("vec_id").as("cand_id"), col("v").as("c"))
-      .crossJoin(broadcast(probes))
-      .filter(col("cand_id") =!= col("probe_id"))
-      .withColumn("cos", r5(expr("cosine_sim(p, c)")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("cand_id")))
-        .cast("long"))
-      .filter(col("rnk") <= 5)
-      .select("probe_id", "rnk", "cand_id", "cos")
+    graft.api.Graft.cosineTopK(
+        e.select(col("vec_id").as("cand_id"), col("v").as("c")),
+        e.filter(col("vec_id") < 10)
+          .select(col("vec_id").as("probe_id"), col("v").as("p")),
+        5, corpusId = "cand_id", corpusVec = "c", probeVec = "p")
+      .select(col("probe_id"), col("rank").as("rnk"), col("cand_id"),
+        r5(col("cos")).as("cos"))
       .orderBy("probe_id", "rnk")
   }
 

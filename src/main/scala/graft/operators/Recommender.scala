@@ -533,40 +533,26 @@ object Recommender {
     * shuffle. The per-item marginals are vocabulary-sized — NO forced
     * broadcast (q64 discipline), statistics/AQE decide; only the one-row
     * user count is broadcast. */
-  def q107(s: SparkSession, d: String): DataFrame = {
-    val r = cappedRatings(s, d).select(col("user_id"), col("item"))
-    val n = r.agg(countDistinct(col("user_id")).as("n_users"))
-    val ci = r.groupBy("item").agg(count(lit(1)).as("c"))
-    pairSupport(s, d)
-      .join(ci.select(col("item").as("item_a"), col("c").as("c_a")), "item_a")
-      .join(ci.select(col("item").as("item_b"), col("c").as("c_b")), "item_b")
-      .crossJoin(broadcast(n))
-      .select(col("item_a"), col("item_b"), col("c_ab"),
-        r4(log((col("c_ab") * col("n_users")).cast("double") /
-          (col("c_a") * col("c_b")).cast("double"))).as("pmi"))
+  def q107(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.cooccurrencePmiOnSupport(pairSupport(s, d),
+        cappedRatings(s, d), "user_id", "item")
+      .select(col("item_a"), col("item_b"), col("c_ab"), r4(col("pmi")).as("pmi"))
       .orderBy(col("c_ab").desc, col("item_a"), col("item_b"))
       .limit(20)
-  }
 
   /** Next-item transition matrix (session-based / Markov recommender):
     * consecutive items per user's event-time sequence → transition counts
     * and per-source-item probabilities, top-20 transitions. One window per
     * user partition (bounded history) + two aggregations — linear, and the
     * lag never leaves the user partition. */
-  def q108(s: SparkSession, d: String): DataFrame = {
-    val e = events(s, d).select(col("user_id"), col("event_id"), col("tsc"),
-      itemFromProps.as("item"))
-    val w = Window.partitionBy("user_id").orderBy("tsc", "event_id")
-    val tr = e.withColumn("prev_item", lag("item", 1).over(w))
-      .filter(col("prev_item").isNotNull)
-      .groupBy("prev_item", "item").agg(count(lit(1)).as("c"))
-    val tot = tr.groupBy("prev_item").agg(sum("c").as("t"))
-    tr.join(tot, "prev_item")
-      .select(col("prev_item"), col("item").as("next_item"), col("c"),
-        r4(col("c").cast("double") / col("t").cast("double")).as("prob"))
+  def q108(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.nextTransitions(
+        events(s, d).select(col("user_id"), col("event_id"), col("tsc"),
+          itemFromProps.as("item")),
+        "user_id", Seq(col("tsc"), col("event_id")), "item")
+      .select(col("prev_item"), col("next_item"), col("c"), r4(col("prob")).as("prob"))
       .orderBy(col("c").desc, col("prev_item"), col("next_item"))
       .limit(20)
-  }
 
   /** Coverage + exposure-concentration evaluation of the personalized
     * popularity recommender (top-5 most popular items each user has NOT

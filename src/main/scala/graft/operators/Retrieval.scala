@@ -36,29 +36,13 @@ object Retrieval {
     * {hash, join, dup} — top-20 docs. Per-term scores are summed in FIXED
     * term order via conditional aggregation: a plain sum(score) over terms
     * would be order-nondeterministic in IEEE doubles across engines. */
-  def q100(s: SparkSession, d: String): DataFrame = {
-    val words = TextPipeline.words1(s, d).select(col("doc_id"), col("w"))
-    val dl = TextPipeline.docWords(s, d)
-      .filter(size(col("words")) >= 1)
-      .select(col("doc_id"), size(col("words")).cast("long").as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
-    val tf = words.filter(col("w").isin("hash", "join", "dup"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("w").agg(count(lit(1)).as("df"))
-    val sc = tf.join(broadcast(df), "w").join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("sc",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          ((col("tf") * lit(2.2)) /
-            (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))))
-    sc.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        (coalesce(sum(when(col("w") === "hash", col("sc"))), lit(0.0)) +
-          coalesce(sum(when(col("w") === "join", col("sc"))), lit(0.0)) +
-          coalesce(sum(when(col("w") === "dup", col("sc"))), lit(0.0))).as("score"))
+  def q100(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.bm25Rank(
+        TextPipeline.words1(s, d).select(col("doc_id"), col("w")),
+        TextPipeline.docWords(s, d).filter(size(col("words")) >= 1)
+          .select(col("doc_id"), size(col("words")).cast("long").as("dl")),
+        "doc_id", "w", "dl", Seq("hash", "join", "dup"))
       .select(col("doc_id"), col("n_terms"), r4(col("score")).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id")).limit(20)
-  }
 
   /** Symmetric int8 embedding quantization: scale = max|x|/127, q_i =
     * round-half-up(x_i/scale), plus the reconstruction RMSE. The round is
@@ -66,19 +50,11 @@ object Retrieval {
     * (Spark `aggregate` ≡ DuckDB `list_reduce`), so both engines produce
     * bit-identical output. */
   def q102(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d)
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("amax", expr("aggregate(v, 0e0, (a, x) -> greatest(a, abs(x)))"))
-      .withColumn("scale", col("amax") / lit(127.0))
-      .withColumn("q", expr(
-        "transform(v, x -> IF(scale = 0e0, 0L, " +
-          "greatest(-127L, least(127L, CAST(floor(x / scale + 0.5e0) AS BIGINT)))))"))
+    graft.api.Graft.quantizeInt(embeddings(s, d).select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")), "v")
       .select(col("vec_id"), col("scale"),
-        expr("array_join(transform(q, qi -> CAST(qi AS STRING)), ',')").as("qsig"),
-        rnd(sqrt(expr(
-          "aggregate(zip_with(v, q, (x, qi) -> " +
-            "(x - CAST(qi AS DOUBLE) * scale) * (x - CAST(qi AS DOUBLE) * scale)), " +
-            "0e0, (a, x) -> a + x)") / lit(64.0)), 6).as("rmse"))
+        expr("array_join(transform(codes, qi -> CAST(qi AS STRING)), ',')").as("qsig"),
+        rnd(col("rmse"), 6).as("rmse"))
       .orderBy("vec_id")
 
   /** Signed-random-projection LSH buckets: 16 hyperplanes whose ±1 signs
@@ -93,23 +69,11 @@ object Retrieval {
     * The bucket population comes from a window count — a groupBy+join
     * back would re-evaluate the projection pipeline for the second
     * reference (measured 2x the query's time). */
-  def q103(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RpBucket.register(s)
-    val planes = s.range(16).toDF("p").crossJoin(s.range(64).toDF("i"))
-      .select(col("p"), col("i"), expr(
-        "IF(substring(sha2(concat(CAST(p AS STRING), '_', CAST(i AS STRING)), 256), 1, 1) <= '7', 1L, -1L)")
-        .as("sgn"))
-      .groupBy("p")
-      .agg(expr("transform(sort_array(collect_list(struct(i, sgn))), x -> x.sgn)").as("sv"))
-      .agg(expr("transform(sort_array(collect_list(struct(p, sv))), x -> x.sv)").as("planes"))
-    val bk = embeddings(s, d)
-      .crossJoin(broadcast(planes))
-      .select(col("vec_id"),
-        expr("rp_bucket(embedding, planes, 1000e0)").as("bucket"))
-    bk.withColumn("bsize", count(lit(1)).over(
+  def q103(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.rpLshBucket(embeddings(s, d), "embedding", dims = 64)
+      .withColumn("bsize", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("bucket")))
       .select("vec_id", "bucket", "bsize").orderBy("vec_id")
-  }
 
   /** Inverted-index construction — the build side of q100's BM25 scoring:
     * for the 20 highest-df terms, the document frequency, total term count,

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** §2.6 sorts / limits / top-k / set operations / keyed dedup.
@@ -53,18 +52,14 @@ object SetOps {
       .orderBy("user_id")
   }
 
-  def q44(s: SparkSession, d: String): DataFrame = {
+  def q44(s: SparkSession, d: String): DataFrame =
     // Order on the µs-truncated ts (`div 1000`), not the raw ns value: the
     // oracle's scan is already µs, so an ns-refined ordering could pick a
     // different "first" row on a same-µs tie (SURVEY §1.3).
-    val w = Window.partitionBy("user_id", "event_type")
-      .orderBy(expr("ts div 1000").asc, col("event_id").asc)
-    events(s, d)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    graft.api.Graft.dedupFirst(events(s, d), Seq("user_id", "event_type"),
+        Seq(expr("ts div 1000"), col("event_id")))
       .select("user_id", "event_type", "event_id", "tsc")
       .orderBy("user_id", "event_type")
-  }
 
   /** AUDIENCE OVERLAP matrix: pairwise Jaccard between the user sets of
     * every event-type pair — "how much do my clicker and purchaser

@@ -249,33 +249,33 @@ object TextPipeline {
   }
 
   /** Quality scoring: length/punctuation/stopword ratios combined into a
-    * [0,1] score. All ratios are exact int/int divisions → cross-engine
-    * deterministic; the score formula is identical text in both engines. */
-  def q79(s: SparkSession, d: String): DataFrame =
+    * [0,1] score ([[graft.api.Graft.qualityScore]], with its two ratios
+    * reported beside it). All ratios are exact int/int divisions →
+    * cross-engine deterministic; the score formula is identical text in
+    * both engines. */
+  def q79(s: SparkSession, d: String): DataFrame = {
     // r15 session 2: the word-derived ratios read the cached `words`
     // arrays instead of re-splitting text (docWords filters empties, so
     // size(words) and the stopword count are the identical values; the
     // lower() the old inline split applied is a no-op for the stopword
     // membership test on already-lowercased words)
+    val (text, words) = (col("text"), col("words"))
     docWords(s, d)
       .join(documents(s, d).select("doc_id", "text", "n_chars"), "doc_id")
       .select(col("doc_id"),
-        size(col("words")).cast("long").as("n_words"),
+        size(words).cast("long").as("n_words"),
         expr("CAST(length(regexp_replace(text, '[^a-z]', '')) AS DOUBLE) " +
           "/ nullif(CAST(size(words) AS DOUBLE), 0e0)").as("avg_wlen_raw"),
-        expr("CAST(length(regexp_replace(text, '[a-z0-9 ]', '')) AS DOUBLE) / nullif(CAST(length(text) AS DOUBLE), 0e0)")
-          .as("punct_ratio_raw"),
-        expr("CAST(size(filter(words, " +
-          "w -> w IN ('the', 'a', 'of', 'in', 'and', 'to'))) AS DOUBLE) " +
-          "/ nullif(CAST(size(words) AS DOUBLE), 0e0)").as("stop_ratio_raw"))
+        graft.api.Graft.punctRatio(text).as("punct_ratio_raw"),
+        graft.api.Graft.stopwordRatio(words).as("stop_ratio_raw"),
+        graft.api.Graft.qualityScore(text, words).as("quality_raw"))
       .select(col("doc_id"), col("n_words"),
         r2(col("avg_wlen_raw")).as("avg_wlen"),
         r4(col("punct_ratio_raw")).as("punct_ratio"),
         r4(col("stop_ratio_raw")).as("stop_ratio"),
-        r4(least(lit(1.0), col("n_words") / lit(100.0))
-          * (lit(1.0) - col("punct_ratio_raw"))
-          * (lit(0.5) + least(lit(0.5), col("stop_ratio_raw") * lit(5.0)))).as("quality"))
+        r4(col("quality_raw")).as("quality"))
       .orderBy("doc_id")
+  }
 
   /** Token counting: whitespace tokens + a BPE-ish regex (alnum runs or
     * single non-space symbols), chars-per-token ratio. */
@@ -304,11 +304,11 @@ object TextPipeline {
 
   /** IVF-bucketed similarity search — the 100 TB path for q71: coarse-
     * quantize with the per-label centroids (q73), assign each probe to its
-    * nearest centroid, search ONLY that cell (nprobe=1). Cells are
-    * data-partitionable; the probe-cell assignment is a broadcast join
-    * against the dimension-sized centroid table. */
+    * nearest centroid, search ONLY that cell (nprobe=1) —
+    * [[graft.api.Graft.ivfTopK]]. Cells are data-partitionable; the
+    * probe-cell assignment is a broadcast join against the
+    * dimension-sized centroid table. */
   def q85(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val e = embeddings(s, d)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
     val cent = e
@@ -317,23 +317,15 @@ object TextPipeline {
       .groupBy("label")
       .agg(expr("transform(sort_array(collect_list(struct(pos, cx))), s -> s.cx)")
         .as("cvec"))
-    val cell = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("p"))
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos", r5(expr("cosine_sim(p, cvec)")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("ccos").desc, col("label"))))
-      .filter(col("rn") === 1)
-      .select(col("probe_id"), col("p"), col("label").as("cell"))
-    e.select(col("vec_id").as("cand_id"), col("label").as("cell"), col("v").as("c"))
-      .join(broadcast(cell), "cell")
-      .filter(col("cand_id") =!= col("probe_id"))
-      .withColumn("cos", r5(expr("cosine_sim(p, c)")))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("cand_id")))
-        .cast("long"))
-      .filter(col("rnk") <= 3)
-      .select("probe_id", "cell", "rnk", "cand_id", "cos")
+      .withColumnRenamed("label", "cell")
+    graft.api.Graft.ivfTopK(
+        e.select(col("vec_id").as("cand_id"), col("v").as("c"), col("label").as("cell")),
+        cent,
+        e.filter(col("vec_id") < 10)
+          .select(col("vec_id").as("probe_id"), col("v").as("p")),
+        3, corpusId = "cand_id", corpusVec = "c", probeVec = "p")
+      .select(col("probe_id"), col("cell"), col("rank").as("rnk"), col("cand_id"),
+        r5(col("cos")).as("cos"))
       .orderBy("probe_id", "rnk")
   }
 

@@ -25,8 +25,7 @@ class FacadeLawSpec extends AnyFunSuite {
     val lDf = s.createDataFrame(left).toDF("id", "k", "ts")
     val rDf = s.createDataFrame(right).toDF("k", "rts", "pay")
     for (strict <- Seq(true, false)) {
-      val got = G.asofJoin(lDf, rDf, Seq("k"), "ts", "rts", Seq("id"),
-          Seq("pay"), strict)
+      val got = G.asofJoin(lDf, rDf, Seq("k"), "ts", "rts", Seq("pay"), strict)
         .select("id", "asof_rts", "asof_pay").collect()
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2)))))
@@ -66,12 +65,13 @@ class FacadeLawSpec extends AnyFunSuite {
       (rng.nextInt(30).toLong, 100L + rng.nextInt(20)))
     val df = s.createDataFrame(rows).toDF("id", "day")
     val got = G.rollingDistinct(df, "id", "day", 7)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val obs = rows.distinct
-    val hi = obs.map(_._2).max
+    val days = obs.map(_._2).toSet
     val want = obs
-      .flatMap { case (id, dy) => (dy until dy + 7).filter(_ <= hi).map(t => (t, id)) }
-      .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2).distinct.size.toLong }
+      .flatMap { case (id, dy) => (dy until dy + 7).filter(days).map(t => (t, id)) }
+      .groupBy(_._1).map { case (t, xs) =>
+        t -> ((xs.map(_._2).distinct.size.toLong, obs.count(_._2 == t).toLong)) }
     assert(got == want)
   }
 
@@ -127,7 +127,7 @@ class FacadeLawSpec extends AnyFunSuite {
     val rows = (0 until 300).map(i =>
       (s"s${rng.nextInt(6)}", i.toLong, (rng.nextInt(90) + 1).toLong))
     val df = s.createDataFrame(rows).toDF("src", "ord", "tok")
-    val kept = G.tokenBudgetFill(df, "src", "ord", "tok", 500L)
+    val kept = G.tokenBudgetFill(df, "src", Seq(col("ord")), "tok", 500L)
       .select("src", "ord").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     val chunks = G.packSequences(df, "src", "ord", "tok", 400L)
@@ -337,16 +337,17 @@ class FacadeLawSpec extends AnyFunSuite {
     val rng = new scala.util.Random(67)
     val corpus = (0 until 400).map(_ =>
       (rng.nextInt(50).toLong, s"sh${rng.nextInt(80)}"))
-    val pDf = s.createDataFrame(
-      (0 until 120).map(_ => Tuple1(s"sh${rng.nextInt(60)}"))).toDF("key")
-    val probe = pDf.collect().map(_.getString(0)).toSeq
+    // 40 probe docs of three keys each; keys repeat across probe docs
+    val probe = (0 until 120).map(i => (1000L + i / 3, s"sh${rng.nextInt(60)}"))
     val got = G.decontaminate(s.createDataFrame(corpus).toDF("doc", "key"),
-        pDf, "key", "doc")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val probeSet = probe.toSet
+        s.createDataFrame(probe).toDF("doc", "key"), "key", "doc")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val probeSet = probe.map(_._2).toSet
     val want = corpus.groupBy(_._1).flatMap { case (doc, rs) =>
-      val n = rs.map(_._2).distinct.count(probeSet)
-      if (n > 0) Some(doc -> n.toLong) else None
+      val shared = rs.map(_._2).distinct.filter(probeSet)
+      val benchDocs = probe.filter(p => shared.contains(p._2)).map(_._1).distinct
+      if (shared.nonEmpty) Some(doc -> ((shared.size.toLong, benchDocs.size.toLong)))
+      else None
     }
     assert(got == want)
   }

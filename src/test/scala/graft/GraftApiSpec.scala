@@ -51,7 +51,7 @@ class GraftApiSpec extends AnyFunSuite {
     val o = Tables.orders(s, d)
       .select(col("o_custkey").as("user_id"), col("o_orderkey"), col("o_orderdate"))
     val api = Graft.asofJoin(ev, o, keys = Seq("user_id"),
-        leftTs = "tsc", rightTs = "o_orderdate", leftId = Seq("event_id"),
+        leftTs = "tsc", rightTs = "o_orderdate",
         payload = Seq("o_orderkey"), strict = true)
       .filter(col("asof_o_orderkey").isNotNull) // q17 is inner (matched only)
       .select(col("event_id"), col("user_id"), col("tsc"),
@@ -118,9 +118,9 @@ class GraftApiSpec extends AnyFunSuite {
     val left = Seq((1L, "k", 100L)).toDF("id", "sym", "ts")
     val right = Seq(("k", 100L, 9.5), ("k", 99L, 9.0)).toDF("sym", "rts", "px")
     val strict = Graft.asofJoin(left, right, Seq("sym"), "ts", "rts",
-      Seq("id"), Seq("px"), strict = true).select("asof_px").head.getDouble(0)
+      Seq("px"), strict = true).select("asof_px").head.getDouble(0)
     val atOrBefore = Graft.asofJoin(left, right, Seq("sym"), "ts", "rts",
-      Seq("id"), Seq("px"), strict = false).select("asof_px").head.getDouble(0)
+      Seq("px"), strict = false).select("asof_px").head.getDouble(0)
     assert(strict == 9.0, "strict as-of must take the row BEFORE the timestamp")
     assert(atOrBefore == 9.5, "non-strict as-of must admit the equal-timestamp row")
     // width=1: only timestamps differing by ≤1 pair up, including equals
@@ -245,6 +245,11 @@ class GraftApiSpec extends AnyFunSuite {
       .select(col("doc_id"), Tables.r4(Graft.qualityScore(col("text"))).as("quality"))
     val q79 = operators.TextPipeline.q79(s, d).select("doc_id", "quality")
     assert(api.except(q79).isEmpty && q79.except(api).isEmpty)
+    // an empty text has no characters and no words: null, not /0
+    val sp = s
+    import sp.implicits._
+    assert(Seq("").toDF("text").select(Graft.qualityScore(col("text")))
+      .head.isNullAt(0))
   }
 
   test("retrieval facade edges: zero vector, single plane, empty query") {
@@ -281,8 +286,8 @@ class GraftApiSpec extends AnyFunSuite {
       .distinct()
     val api = Graft.decontaminate(
         sh.filter("doc_id >= 10"), sh.filter("doc_id < 10"), "sh", "doc_id")
-      .select("doc_id", "n_shared")
-    val q106 = operators.Curation.q106(s, d).select("doc_id", "n_shared")
+      .select("doc_id", "n_shared", "n_bench")
+    val q106 = operators.Curation.q106(s, d).select("doc_id", "n_shared", "n_bench")
     assert(api.except(q106).isEmpty && q106.except(api).isEmpty)
   }
 
@@ -293,7 +298,7 @@ class GraftApiSpec extends AnyFunSuite {
         substring(sha2(col("doc_id").cast("string"), 256), 1, 8).as("hb"))
       // orderCol is a single column: hb ties are broken by appending the id
       .withColumn("ord", concat(col("hb"), lpad(col("doc_id").cast("string"), 12, "0")))
-    val api = Graft.tokenBudgetFill(t, "source", "ord", "tokens", 1024L)
+    val api = Graft.tokenBudgetFill(t, "source", Seq(col("ord")), "tokens", 1024L)
       .select("source", "doc_id", "tokens")
     val q109 = operators.Curation.q109(s, d).select("source", "doc_id", "tokens")
     assert(api.except(q109).isEmpty && q109.except(api).isEmpty)
@@ -425,10 +430,9 @@ class GraftApiSpec extends AnyFunSuite {
     val q121 = operators.Analytics.q121(s, d)
       .select(datediff(to_date(col("day")), lit("1970-01-01").cast("date")).as("eday"),
         col("wau_7d"))
-    // q121 inner-joins to observed days; the api emits every bucket up to
-    // the max — compare on q121's day set
+    // both report exactly the observed days
     val joined = q121.join(api, "eday")
-    assert(joined.count() == q121.count())
+    assert(joined.count() == q121.count() && api.count() == q121.count())
     assert(joined.filter(col("wau_7d") =!= col("wau_api")).count() == 0)
   }
 
@@ -794,6 +798,10 @@ class GraftApiSpec extends AnyFunSuite {
         Tables.r4(col("z")).as("z"))
     assert(mw.collect().toSeq ==
       graft.operators.Analytics.q211(s, d).collect().toSeq)
+    // an empty arm zeroes the variance term: null z, not /0
+    val oneArm = Graft.mannWhitney(spend.filter(col("arm") === "A"), "y", "arm", "A", "B")
+      .head()
+    assert(oneArm.getAs[Long]("n_b") == 0L && oneArm.isNullAt(oneArm.fieldIndex("z")))
     val base = Tables.lineitem(s, d).select(col("l_returnflag").as("rf"),
       col("l_quantity").as("x"),
       Tables.r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"))
