@@ -17,10 +17,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   *    final (post-AQE) physical plan of the second run with each
   *    operator's runtime metrics — the SQL-tab per-operator view in text
   *    form. The walked plan is the frame `Bench.force` executes.
-  *  - `profile`: per key, the min wall of 3 forced runs plus the jobs,
-  *    stages, tasks and task-seconds of the last (steady) run — run 1
-  *    absorbs memo builds exactly as in Bench. One JSON line per key,
-  *    slowest first.
+  *  - `profile`: per key, the min wall of 3 built-and-forced runs plus,
+  *    for the last (steady) run, `build_jobs` (the Spark jobs run while
+  *    the frame is built) and the forced run's jobs, stages, tasks and
+  *    task-seconds — run 1 absorbs memo builds exactly as in Bench. One
+  *    JSON line per key, slowest first.
   *  - `budget`: each key's static-plan exchange count ([[shuffleCounts]]),
   *    as `<key> <count>` lines; `ALL` leaves out [[constructionJobKeys]],
   *    so at sf0.001 its output is `src/test/resources/shuffle_budget.txt`.
@@ -147,20 +148,30 @@ object Probe {
           val fn = SparkEntry.queries(k)
           spark.sparkContext.setJobDescription(s"profile:$k")
           val runs = (1 to 3).map { _ =>
-            val tally = new Bench.TaskTally
-            spark.sparkContext.addSparkListener(tally)
-            val t0 = System.nanoTime()
-            try Bench.force(fn(spark, sfDir))
-            catch { case e: Throwable => System.err.println(s"[profile] $k failed: $e") }
-            val wall = (System.nanoTime() - t0) / 1e9
-            Bench.drainTallies(tally)
-            spark.sparkContext.removeSparkListener(tally)
-            (wall, tally)
+            val build, tally = new Bench.TaskTally
+            var wall = 0.0
+            // the build and the forced run each under their own tally;
+            // the drain between them stays out of the wall
+            def tallied[A](t: Bench.TaskTally)(body: => A): A = {
+              spark.sparkContext.addSparkListener(t)
+              val t0 = System.nanoTime()
+              try body finally {
+                wall += (System.nanoTime() - t0) / 1e9
+                Bench.drainTallies(t)
+                spark.sparkContext.removeSparkListener(t)
+              }
+            }
+            try {
+              val df = tallied(build)(fn(spark, sfDir))
+              tallied(tally)(Bench.force(df))
+            } catch { case e: Throwable => System.err.println(s"[profile] $k failed: $e") }
+            (wall, build, tally)
           }
-          (k, runs.map(_._1).min, runs.last._2)
+          (k, runs.map(_._1).min, runs.last._2, runs.last._3)
         }
-        rows.sortBy(-_._2).foreach { case (k, wall, t) =>
+        rows.sortBy(-_._2).foreach { case (k, wall, b, t) =>
           println(s"""{"metric":"profile","key":"$k","wall_sec":${Bench.f3(wall)},""" +
+            s""""build_jobs":${b.jobs.get},""" +
             s""""jobs":${t.jobs.get},"stages":${t.stages.get},"tasks":${t.tasks.get},""" +
             s""""task_sec":${Bench.f3(t.runMs.get / 1e3)}}""")
         }

@@ -1,20 +1,45 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared table loaders + cross-engine determinism helpers (SURVEY.md §1, §2.9).
   *
-  * Design notes for scale (SURVEY.md §4): every loader returns a plain
+  * Design notes for scale (SURVEY.md §4): every loader returns a fresh
   * parquet-backed DataFrame so Catalyst can push filters/projections into the
-  * scan; nothing here collects to the driver. The ns-timestamp recipe for
+  * scan; nothing here collects to the driver. A base table's parquet schema
+  * is inferred once per session and file state ([[table]]), so building a
+  * query runs no Spark job. The ns-timestamp recipe for
   * `events` (SURVEY.md §1.3) is applied inside the loader so every query that
   * touches events is safe regardless of session configs.
   */
 object Tables {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A base table as a fresh parquet relation. `spark.read.parquet` runs a
+    * schema-inference Spark job on every call; here the inferred schema is
+    * kept as JSON in the session's RuntimeConfig (a [[confMemo]], dropped by
+    * [[release]]) and later reads pass it to `spark.read.schema`, which runs
+    * no job. The memo key holds, beside (sfDir, name):
+    *  - the newest modification time and the total length of the path's
+    *    entries, from one driver-local listing, so a table rewritten in
+    *    place (one file, or any part file of a directory) is inferred anew;
+    *  - `spark.sql.legacy.parquet.nanosAsLong`, which decides whether a
+    *    timestamp[ns] column infers as LONG (see [[events]]).
+    * Every call still builds a new relation with fresh attribute ids, so
+    * self-joins and plans are exactly those of a plain parquet read. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val files = path.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(path)
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val key = s"graft.memo.schema.${memoName(sfDir, name)}." +
+      s"${files.map(_.getModificationTime).foldLeft(0L)(math.max)}." +
+      s"${files.map(_.getLen).sum}.$nanos"
+    val schema = confMemo(spark, key)(spark.read.parquet(path.toString).schema.json)
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
+      .parquet(path.toString)
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -79,12 +104,10 @@ object Tables {
 
   /** Session-scoped memoized row count of a base table. Counted at most
     * once per (session, sfDir, table); the result is parked in the
-    * session's RuntimeConfig (a plain string — no plan, no Dataset, so
-    * none of the WeakHashMap pinning hazards the view memo's scaladoc
-    * documents), and every later call is a driver-local conf read with
-    * ZERO Spark jobs. Adaptive facades (q209's rankNormalize) use this so
-    * their size-based path choice stops re-running a count job per
-    * invocation. */
+    * session's RuntimeConfig ([[confMemo]]), and every later call is a
+    * driver-local conf read with ZERO Spark jobs. Adaptive facades (q209's
+    * rankNormalize) use this so their size-based path choice stops
+    * re-running a count job per invocation. */
   private[graft] def rowCountKey(sfDir: String, name: String): String =
     "graft.memo.rowcount." + memoName(sfDir, name)
 
@@ -97,16 +120,8 @@ object Tables {
     * docWords cache spread): computed at most once per (session, sfDir,
     * name), parked in RuntimeConfig, ZERO Spark jobs on later calls. */
   private[graft] def memoizedLong(spark: SparkSession, sfDir: String,
-      name: String)(compute: => Long): Long = {
-    val key = rowCountKey(sfDir, name)
-    spark.conf.getOption(key) match {
-      case Some(v) => v.toLong
-      case None =>
-        val n = compute
-        spark.conf.set(key, n.toString)
-        n
-    }
-  }
+      name: String)(compute: => Long): Long =
+    confMemo(spark, rowCountKey(sfDir, name))(compute.toString).toLong
 
   /** Session-scoped memoized boolean probe, the [[memoizedCount]] pattern
     * for yes/no corpus facts (e.g. "do all ratings ids fit in Int?"). The
@@ -116,21 +131,28 @@ object Tables {
     * Added r13 for the ALS big-id facade, whose per-invocation min/max agg
     * was costing q65/q66 ~0.6–0.8 s each per bench pass (r12 verdict #2). */
   private[graft] def memoizedFlag(spark: SparkSession, sfDir: String,
-      name: String)(compute: => Boolean): Boolean = {
-    val key = "graft.memo.flag." + memoName(sfDir, name)
-    spark.conf.getOption(key) match {
-      case Some(v) => v.toBoolean
-      case None =>
-        val b = compute
-        spark.conf.set(key, b.toString)
-        b
-    }
-  }
+      name: String)(compute: => Boolean): Boolean =
+    confMemo(spark, "graft.memo.flag." + memoName(sfDir, name))(compute.toString).toBoolean
 
-  /** Drop this session's memoized views and unpersist their cached data.
-    * Note Spark's CacheManager is context-shared: unpersisting here also
-    * evicts any other session's identical (same-plan) cache entry. That
-    * cross-session evict is correctness-safe — the other session's memo
+  /** The one conf memo behind the row counts, flags and table schemas: the
+    * value under `key` (a `graft.memo.` name, so [[release]] drops it), or
+    * `compute`'s, stored first. A plain string in the session's own
+    * RuntimeConfig — no plan, no Dataset, so none of the WeakHashMap
+    * pinning hazards the view memo's scaladoc documents. */
+  private def confMemo(spark: SparkSession, key: String)(compute: => String): String =
+    spark.conf.getOption(key).getOrElse {
+      val v = compute
+      spark.conf.set(key, v)
+      v
+    }
+
+  /** Drop this session's memoized views and unpersist their cached data,
+    * and forget its conf memos — row counts, flags and the base-table
+    * schemas [[table]] keeps, so the next read of each table infers its
+    * schema again. Note Spark's CacheManager is context-shared:
+    * unpersisting here also evicts any other session's identical
+    * (same-plan) cache entry. That cross-session evict is
+    * correctness-safe — the other session's memo
     * VIEW survives in its own catalog and transparently falls back to the
     * uncached plan — and ConcurrencySpec pins it under an actual race
     * (release() looping in one session while another replays queries:
@@ -144,7 +166,7 @@ object Tables {
         try spark.catalog.uncacheTable(n) catch { case _: Exception => () }
         spark.catalog.dropTempView(n)
       }
-    // covers both the rowcount and flag conf memos
+    // covers the rowcount, flag and table-schema conf memos
     spark.conf.getAll.keys.filter(_.startsWith("graft.memo."))
       .foreach(spark.conf.unset)
     // and the prefix-scan block-bounds memo (r15 session 2)

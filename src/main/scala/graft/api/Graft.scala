@@ -1097,13 +1097,25 @@ object Graft {
     * over the support — one extra aggregate expression), entering the
     * final max as literals: the old fact-aggregating `tot` frame and its
     * broadcast crossJoin disappear, and the support is evaluated one time
-    * fewer. Values are bit-identical — same addends, same divisions. */
+    * fewer. Values are bit-identical — same addends, same divisions.
+    *
+    * A CACHED support (q145's session memo) keeps that job's bounds and
+    * totals in the session's [[collectBounds]] memo, so a repeated
+    * construction runs no Spark job. Totals are values, not balance, so
+    * they are only memoized while the input is cached: its data cannot
+    * change until it is unpersisted, and Tables.release, which unpersists
+    * the memo views, drops these entries with them. */
   def ksStatisticOnSupport(pv: DataFrame): DataFrame = {
-    val row = pv.agg(blockCuts(pv, "__v")._2.as("__bnds"),
-      sum("__c1").as("n_a"), sum("__c2").as("n_b")).head()
-    val bnds = cutsAt(row, 0)
-    val nA = if (row.isNullAt(1)) null else Long.box(row.getLong(1))
-    val nB = if (row.isNullAt(2)) null else Long.box(row.getLong(2))
+    val (n, cuts) = blockCuts(pv, "__v")
+    def eager: Seq[Any] = {
+      val row = pv.agg(cuts.as("__bnds"), sum("__c1").as("n_a"),
+        sum("__c2").as("n_b")).head()
+      Seq(cutsAt(row, 0), row.get(1), row.get(2))
+    }
+    val Seq(bnds: Seq[Any] @unchecked, nA, nB) =
+      if (pv.storageLevel == org.apache.spark.storage.StorageLevel.NONE) eager
+      else boundsMemo.getOrElseUpdate((System.identityHashCode(pv.sparkSession),
+        pv.queryExecution.analyzed.canonicalized.semanticHash(), "__v:ks", n), eager)
     prefixSumWith(pv, "__v", Seq("__c1", "__c2"), "_cum", bnds)
       .agg(max(abs(
         col("__c1_cum").cast("double") / lit(nA).cast("double") -
@@ -1199,9 +1211,11 @@ object Graft {
       sum(col("__w") * col("__fx") * col("__fx")).as("__sxx"),
       sum(col("__w") * col("__fy") * col("__fy")).as("__syy"))
       .select(gc :+ col("__n").cast("long").as("n") :+
+        // nullif: a group whose x or y support is a single value has zero
+        // rank variance — null, not 0/0 (as q210)
         ((col("__n") * col("__sxy") - col("__sx") * col("__sy")) /
-          sqrt((col("__n") * col("__sxx") - col("__sx") * col("__sx")) *
-            (col("__n") * col("__syy") - col("__sy") * col("__sy"))))
+          nullif(sqrt((col("__n") * col("__sxx") - col("__sx") * col("__sx")) *
+            (col("__n") * col("__syy") - col("__sy") * col("__sy"))), lit(0.0)))
           .as("spearman"): _*)
   }
 

@@ -805,11 +805,17 @@ class GraftApiSpec extends AnyFunSuite {
     val base = Tables.lineitem(s, d).select(col("l_returnflag").as("rf"),
       col("l_quantity").as("x"),
       Tables.r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"))
-    val sp = Graft.spearman(base, Seq("rf"), "x", "y")
+    // plus a degenerate group whose x support is a single value: zero rank
+    // variance gives a null coefficient (as q210), not [DIVIDE_BY_ZERO]
+    val spark = s
+    import spark.implicits._
+    val flat = Seq(("~", 1, 2.0), ("~", 1, 3.0)).toDF("rf", "x", "y")
+      .select(base.schema.map(f => col(f.name).cast(f.dataType)): _*)
+    val sp = Graft.spearman(base.unionByName(flat), Seq("rf"), "x", "y")
       .select(col("rf"), col("n"), Tables.r4(col("spearman")).as("spearman"))
       .orderBy("rf")
     assert(sp.collect().toSeq ==
-      graft.operators.Analytics.q210(s, d).collect().toSeq)
+      graft.operators.Analytics.q210(s, d).collect().toSeq :+ org.apache.spark.sql.Row("~", 2L, null))
   }
 
   test("lorenz facade reproduces q224 exactly") {

@@ -462,6 +462,83 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(probe() && evals == 2, "release must clear flag memos")
   }
 
+  test("schema memo: a rewritten table reads its new schema, release forgets, nanosAsLong keys apart") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_schema_memo")
+    val s2 = s.newSession()
+    def schemaKeys = s2.conf.getAll.keys.filter(_.startsWith("graft.memo.schema.")).toSet
+    // one parquet file per version, copied over the same table path — the
+    // single-file layout of the corpora
+    def version(name: String, df: org.apache.spark.sql.DataFrame) = {
+      df.coalesce(1).write.parquet(s"$tmp/$name")
+      java.nio.file.Files.list(tmp.resolve(name)).toArray.map(_.toString)
+        .find(_.endsWith(".parquet")).get
+    }
+    val v1 = version("v1", s2.range(3).toDF())
+    val v2 = version("v2", s2.range(3).withColumn("added", col("id") * 2))
+    val target = tmp.resolve("region.parquet")
+    def install(v: String) = java.nio.file.Files.copy(java.nio.file.Paths.get(v),
+      target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    install(v1)
+    assert(Tables.table(s2, tmp.toString, "region").columns.toSeq == Seq("id"))
+    install(v2)
+    val t = Tables.table(s2, tmp.toString, "region")
+    assert(t.columns.toSeq == Seq("id", "added"),
+      "a table rewritten at the same path was read with its old schema")
+    assert(t.agg(sum("added")).head().getLong(0) == 6L)
+    assert(schemaKeys.size == 2, s"one entry per file state expected: $schemaKeys")
+    Tables.release(s2)
+    assert(schemaKeys.isEmpty, "release left schema memos behind")
+    // nanosAsLong changes what inference returns for a timestamp[ns] ts,
+    // so each of its values keeps its own events entry
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    try for (v <- Seq("true", "false")) {
+      s2.conf.set(nanos, v)
+      Tables.table(s2, d, "events")
+    } finally s2.conf.unset(nanos)
+    assert(schemaKeys.map(_.split('.').last) == Set("true", "false"),
+      s"events schema entries: $schemaKeys")
+    Tables.release(s2)
+  }
+
+  test("construction-job gate: a second build of each key runs no Spark job outside the named keys") {
+    // q170's pool collect() is the MMR algorithm's driver step: the
+    // greedy re-rank runs on the driver over the collected candidates
+    val allowed = Probe.constructionJobKeys + "q170_mmr_rerank"
+    val sc = s.sparkContext
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("gate:"))
+          .foreach(g => jobs.add(g.stripPrefix("gate:")))
+    }
+    val keys = SparkEntry.queries.keys.toSeq.sorted
+    Tables.release(s)
+    keys.foreach(k => SparkEntry.queries(k)(s, d))
+    sc.addSparkListener(listener)
+    try {
+      keys.foreach { k =>
+        sc.setJobGroup(s"gate:$k", k)
+        SparkEntry.queries(k)(s, d)
+      }
+      // listener events arrive in order: once this job's start is seen,
+      // every earlier one has been delivered
+      sc.setJobGroup("gate:~end", "end")
+      s.range(1).count()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!jobs.contains("~end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("~end"), "listener never saw the end marker job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      Tables.release(s)
+    }
+    val ran = jobs.toArray.map(_.toString).toSet - "~end"
+    assert(ran.nonEmpty, "no build job attributed to any key: the gate counts nothing")
+    assert(ran.subsetOf(allowed),
+      s"construction jobs in keys outside the named set: ${(ran -- allowed).toSeq.sorted}")
+  }
+
   test("Tables.events: UTC is baked at analysis, the caller's timezone is restored") {
     // the loader pins UTC only while BUILDING the plan (Spark resolves
     // timezone-aware casts against the session tz at analysis); a session
