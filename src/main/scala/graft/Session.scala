@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder behind every entry point (Bench, Verify,
-  * StreamBench, Scale, Probe) and the test session. */
+  * Scale, Probe) and the test session. */
 object Session {
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session

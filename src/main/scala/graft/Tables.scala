@@ -3,25 +3,29 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import scala.collection.concurrent.TrieMap
 
 /** Shared table loaders + cross-engine determinism helpers (SURVEY.md §1, §2.9).
   *
   * Design notes for scale (SURVEY.md §4): every loader returns a fresh
   * parquet-backed DataFrame so Catalyst can push filters/projections into the
-  * scan; nothing here collects to the driver. A base table's parquet schema
-  * is inferred once per session and file state ([[table]]), so building a
-  * query runs no Spark job. The ns-timestamp recipe for
-  * `events` (SURVEY.md §1.3) is applied inside the loader so every query that
-  * touches events is safe regardless of session configs.
+  * scan; nothing here collects to the driver. Shared derived relations are
+  * session-scoped cached views ([[memoizedView]]); driver-side facts —
+  * row counts, corpus flags, base-table schemas, prefix-scan bounds — sit
+  * in one session-scoped value memo ([[value]]); [[release]] drops both.
+  * A base table's parquet schema is inferred once per session and file
+  * state ([[table]]), so building a query runs no Spark job. The
+  * ns-timestamp recipe for `events` (SURVEY.md §1.3) is applied inside the
+  * loader so every query that touches events is safe regardless of
+  * session configs.
   */
 object Tables {
 
   /** A base table as a fresh parquet relation. `spark.read.parquet` runs a
     * schema-inference Spark job on every call; here the inferred schema is
-    * kept as JSON in the session's RuntimeConfig (a [[confMemo]], dropped by
-    * [[release]]) and later reads pass it to `spark.read.schema`, which runs
-    * no job. The memo key holds, beside (sfDir, name):
+    * kept in the session's [[value]] memo (dropped by [[release]]) and
+    * later reads pass it to `spark.read.schema`, which runs no job. The
+    * memo key holds, beside (sfDir, name):
     *  - the newest modification time and the total length of the path's
     *    entries, from one driver-local listing, so a table rewritten in
     *    place (one file, or any part file of a directory) is inferred anew;
@@ -33,11 +37,10 @@ object Tables {
     val path = new Path(s"$sfDir/$name.parquet")
     val files = path.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(path)
     val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val key = s"graft.memo.schema.${memoName(sfDir, name)}." +
+    val key = s"${memoName(sfDir, s"schema_$name")}." +
       s"${files.map(_.getModificationTime).foldLeft(0L)(math.max)}." +
       s"${files.map(_.getLen).sum}.$nanos"
-    val schema = confMemo(spark, key)(spark.read.parquet(path.toString).schema.json)
-    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
+    spark.read.schema(value(spark, key)(spark.read.parquet(path.toString).schema))
       .parquet(path.toString)
   }
 
@@ -55,7 +58,7 @@ object Tables {
     * common case and the hash covers paths that sanitize identically — two
     * sfDirs collide only if BOTH agree, i.e. effectively never (the hash
     * alone would give a 2⁻³² birthday risk per session-lifetime pair). */
-  private def memoName(sfDir: String, key: String): String = {
+  private[graft] def memoName(sfDir: String, key: String): String = {
     val sane = sfDir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40)
     val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sfDir))
     s"graft_memo_${key}_${sane}_$h"
@@ -74,14 +77,15 @@ object Tables {
     * semantics. Each query function still stands alone — the memo is an
     * optimization, not a dependency.
     *
-    * Library hygiene: there is NO library-global map from sessions to plans.
+    * Library hygiene: relations are not kept in a map from sessions.
     * Each memoized relation is registered as a temp view in ITS OWN
     * session's catalog (a `graft_memo_*` name), so the memo's lifetime is
     * exactly the session's — drop the session and its views (and their
-    * plans) are unreachable. A previous design kept a
-    * `WeakHashMap[SparkSession, TrieMap[.., DataFrame]]`, which could never
-    * release anything: every cached Dataset strongly references its
-    * SparkSession, i.e. the map's own values pinned its weak keys.
+    * plans) are unreachable. A `WeakHashMap[SparkSession, .. DataFrame]`
+    * could never release anything: every Dataset strongly references its
+    * SparkSession, so the map's own values would pin its weak keys. The
+    * [[value]] memo is such a weak map, and is safe only because it holds
+    * plain data, never a Dataset or plan.
     *
     * One caveat no session-local scheme can remove: `df.cache()` registers
     * the plan in `SharedState.cacheManager`, which is shared by all
@@ -102,54 +106,43 @@ object Tables {
       build: => DataFrame): DataFrame =
     spark.table(memoizedView(spark, sfDir, key)(build))
 
-  /** Session-scoped memoized row count of a base table. Counted at most
-    * once per (session, sfDir, table); the result is parked in the
-    * session's RuntimeConfig ([[confMemo]]), and every later call is a
-    * driver-local conf read with ZERO Spark jobs. Adaptive facades (q209's
-    * rankNormalize) use this so their size-based path choice stops
-    * re-running a count job per invocation. */
-  private[graft] def rowCountKey(sfDir: String, name: String): String =
-    "graft.memo.rowcount." + memoName(sfDir, name)
-
+  /** Session-scoped memoized row count of a base table: counted at most
+    * once per (session, sfDir, table), a driver-local [[value]] read with
+    * ZERO Spark jobs after. Adaptive facades (q209's rankNormalize) use
+    * this so their size-based path choice runs no count job per call. */
   private[graft] def memoizedCount(spark: SparkSession, sfDir: String,
       name: String): Long =
-    memoizedLong(spark, sfDir, name)(table(spark, sfDir, name).count())
+    value(spark, memoName(sfDir, s"rows_$name"))(table(spark, sfDir, name).count())
 
-  /** [[memoizedCount]] generalized to any session-stable long-valued corpus
-    * statistic (r15 session 2; e.g. the corpus token count that sizes the
-    * docWords cache spread): computed at most once per (session, sfDir,
-    * name), parked in RuntimeConfig, ZERO Spark jobs on later calls. */
-  private[graft] def memoizedLong(spark: SparkSession, sfDir: String,
-      name: String)(compute: => Long): Long =
-    confMemo(spark, rowCountKey(sfDir, name))(compute.toString).toLong
+  /** The session's value memo: row counts, corpus flags and statistics,
+    * base-table schemas and prefix-scan bounds, each under a string key
+    * that names everything its value depends on ([[memoName]] for corpus
+    * facts). Every value is plain data with no reference to its session —
+    * a `Long`, `Boolean`, `StructType`, bounds `Seq` or `Array[Row]` — so
+    * the weak key really dies with its session (the pinning that
+    * [[memoizedView]]'s scaladoc describes needs a Dataset value).
+    * [[release]] drops a session's map. */
+  private val values = new java.util.WeakHashMap[SparkSession, TrieMap[String, Any]]
 
-  /** Session-scoped memoized boolean probe, the [[memoizedCount]] pattern
-    * for yes/no corpus facts (e.g. "do all ratings ids fit in Int?"). The
-    * answer is a corpus property, so it is keyed by (session, sfDir, name)
-    * and parked in RuntimeConfig: the probe's Spark job runs at most once
-    * per session per corpus, every later call is a driver-local conf read.
-    * Added r13 for the ALS big-id facade, whose per-invocation min/max agg
-    * was costing q65/q66 ~0.6–0.8 s each per bench pass (r12 verdict #2). */
-  private[graft] def memoizedFlag(spark: SparkSession, sfDir: String,
-      name: String)(compute: => Boolean): Boolean =
-    confMemo(spark, "graft.memo.flag." + memoName(sfDir, name))(compute.toString).toBoolean
+  private def sessionValues(spark: SparkSession): TrieMap[String, Any] =
+    values.synchronized(values.computeIfAbsent(spark, _ => TrieMap.empty))
 
-  /** The one conf memo behind the row counts, flags and table schemas: the
-    * value under `key` (a `graft.memo.` name, so [[release]] drops it), or
-    * `compute`'s, stored first. A plain string in the session's own
-    * RuntimeConfig — no plan, no Dataset, so none of the WeakHashMap
-    * pinning hazards the view memo's scaladoc documents. */
-  private def confMemo(spark: SparkSession, key: String)(compute: => String): String =
-    spark.conf.getOption(key).getOrElse {
-      val v = compute
-      spark.conf.set(key, v)
-      v
-    }
+  /** The value under `key` in this session's memo, or `compute`'s, stored
+    * first. `compute` runs outside every map update (TrieMap's lookup,
+    * compute, insert-if-absent), so it may itself read the memo — a
+    * count's compute reads its table's schema; two racing first calls
+    * may both compute, and the first insert wins. */
+  private[graft] def value[T](spark: SparkSession, key: String)(compute: => T): T =
+    sessionValues(spark).getOrElseUpdate(key, compute).asInstanceOf[T]
+
+  /** The keys of this session's value memo (for lifecycle checks). */
+  private[graft] def valueKeys(spark: SparkSession): Set[String] =
+    sessionValues(spark).keySet.toSet
 
   /** Drop this session's memoized views and unpersist their cached data,
-    * and forget its conf memos — row counts, flags and the base-table
-    * schemas [[table]] keeps, so the next read of each table infers its
-    * schema again. Note Spark's CacheManager is context-shared:
+    * and forget its [[value]] memo — row counts, flags, bounds and the
+    * base-table schemas [[table]] keeps, so the next read of each table
+    * infers its schema again. Note Spark's CacheManager is context-shared:
     * unpersisting here also evicts any other session's identical
     * (same-plan) cache entry. That cross-session evict is
     * correctness-safe — the other session's memo
@@ -163,14 +156,12 @@ object Tables {
     spark.catalog.listTables().collect()
       .map(_.name).filter(_.startsWith("graft_memo_"))
       .foreach { n =>
-        try spark.catalog.uncacheTable(n) catch { case _: Exception => () }
+        try spark.catalog.uncacheTable(n) catch {
+          case e: Exception => System.err.println(s"[tables] release: uncache $n failed: $e")
+        }
         spark.catalog.dropTempView(n)
       }
-    // covers the rowcount, flag and table-schema conf memos
-    spark.conf.getAll.keys.filter(_.startsWith("graft.memo."))
-      .foreach(spark.conf.unset)
-    // and the prefix-scan block-bounds memo (r15 session 2)
-    graft.api.Graft.clearBoundsMemo(spark)
+    values.synchronized(values.remove(spark))
   }
 
   /** Spread a NARROW-plan memo build across cores before caching (r14;

@@ -733,34 +733,9 @@ object Graft {
     * building block of the distributed prefix scans below. Bound placement
     * only affects balance, never results, so the sketch's approximation is
     * harmless. Appends `__blk`. */
-  private def rangeBlocks(df: DataFrame, orderCol: String): DataFrame =
-    searchBlockLit(df, orderCol, collectBounds(df, orderCol))
-
-  /** r15 session 2: in-session memo of collected block bounds, keyed by
-    * (session identity, canonicalized-plan semanticHash, orderCol, n).
-    * Every re-execution of a prefix-scan key rebuilds a structurally
-    * identical input frame, so without the memo each bench/verify
-    * iteration re-ran the eager bounds job (one full pass over the —
-    * usually cached — support per prefix scan, ~17 keys × 1 job each).
-    * Same class as Tables.memoizedCount/memoizedFlag: a small in-session
-    * scalar memo built on first execution, never persisted across JVMs.
-    * Values are plain scalars/Rows (no Dataset, no session reference —
-    * none of the WeakHashMap pinning hazards Tables' scaladoc documents);
-    * the session key is identityHashCode, and [[clearBoundsMemo]] (wired
-    * into Tables.release) drops a session's entries. A semanticHash
-    * collision could only hand a scan the WRONG bounds — which, by the
-    * invariant above, affects block balance, never results. Streaming
-    * callers (prefixMax in a foreachBatch) see run-1 bounds for later
-    * batches: same invariant, balance only. */
-  private val boundsMemo =
-    new scala.collection.concurrent.TrieMap[(Int, Int, String, Int), Seq[Any]]
-  private val groupBoundsMemo = new scala.collection.concurrent.TrieMap[
-    (Int, Int, String, Int), Array[org.apache.spark.sql.Row]]
-
-  private[graft] def clearBoundsMemo(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val id = System.identityHashCode(spark)
-    boundsMemo.keys.filter(_._1 == id).foreach(boundsMemo.remove)
-    groupBoundsMemo.keys.filter(_._1 == id).foreach(groupBoundsMemo.remove)
+  private def rangeBlocks(df: DataFrame, orderCol: String): DataFrame = {
+    val bnds = collectBounds(df, orderCol)
+    searchBlock(df, orderCol, array(bnds.map(lit): _*), bnds.size)
   }
 
   /** Evaluate [[rangeBlocks]]' bounds EAGERLY: one approx_percentile job,
@@ -776,13 +751,27 @@ object Graft {
     * in one query). Collected once, the bounds become foldable literals:
     * no crossJoin, no broadcast stage round, one evaluation by
     * construction. Bound VALUES are unchanged (same sketch over the same
-    * input) and bound placement never affects results — only balance. */
+    * input) and bound placement never affects results — only balance.
+    *
+    * The collected bounds are kept in the session's value memo
+    * (graft.Tables.value, dropped by Tables.release) under
+    * [[boundsKey]]: every re-execution of a prefix-scan key rebuilds a
+    * structurally identical input frame, and without the memo each
+    * bench/verify iteration re-ran this eager job (~17 keys × 1 job). A
+    * semanticHash collision could only hand a scan the WRONG bounds —
+    * which affects block balance, never results. Streaming callers
+    * (prefixMax in a foreachBatch) see run-1 bounds for later batches:
+    * same invariant, balance only. */
   private def collectBounds(df: DataFrame, orderCol: String): Seq[Any] = {
     val (n, cuts) = blockCuts(df, orderCol)
-    val key = (System.identityHashCode(df.sparkSession),
-      df.queryExecution.analyzed.canonicalized.semanticHash(), orderCol, n)
-    boundsMemo.getOrElseUpdate(key, cutsAt(df.agg(cuts.as("__bnds")).head(), 0))
+    graft.Tables.value(df.sparkSession, boundsKey(df, orderCol, n))(
+      cutsAt(df.agg(cuts.as("__bnds")).head(), 0))
   }
+
+  /** The value-memo key of `df`'s block bounds over `cols` in `n` blocks:
+    * the canonicalized plan's semanticHash, the column(s) and n. */
+  private def boundsKey(df: DataFrame, cols: String, n: Int): String =
+    s"bounds.${df.queryExecution.analyzed.canonicalized.semanticHash()}.$cols.$n"
 
   /** The n − 1 interior cut fractions of an n-way split as SQL double
     * literals (`0.1e0,0.2e0,…,0.9e0` for n = 10) — the argument of every
@@ -803,33 +792,7 @@ object Graft {
   private def cutsAt(row: Row, i: Int): Seq[Any] =
     if (row.isNullAt(i)) Seq.empty else row.getSeq[Any](i)
 
-  /** [[searchBlock]] against DRIVER-LOCAL bounds: the same power-of-two
-    * descent, but element_at probes a FOLDABLE literal array — no
-    * `__bnds` column is joined in, and an empty bounds seq (an empty
-    * input's null sketch) short-circuits to block 0 exactly like the old
-    * null-array comparison semantics. Bit-identical `__blk` to the column
-    * form, NULL order values included (they fail every comparison and
-    * stay in block 0). */
-  private def searchBlockLit(df: DataFrame, orderCol: String,
-      bnds: Seq[Any]): DataFrame = {
-    if (bnds.isEmpty) return df.withColumn("__blk", lit(0))
-    val len = bnds.size
-    val arr = array(bnds.map(lit): _*)
-    val steps = Iterator.iterate(Integer.highestOneBit(len))(_ / 2)
-      .takeWhile(_ >= 1).toSeq
-    val withPos = steps.zipWithIndex.foldLeft(df.withColumn("__bs0", lit(0))) {
-      case (acc, (step, i)) =>
-        val cand = col(s"__bs$i") + lit(step)
-        acc.withColumn(s"__bs${i + 1}",
-          when(cand <= lit(len) &&
-              col(orderCol) > element_at(arr, cand.cast("int")),
-            cand).otherwise(col(s"__bs$i")))
-    }
-    withPos.withColumn("__blk", col(s"__bs${steps.size}").cast("int"))
-      .drop((0 to steps.size).map(i => s"__bs$i"): _*)
-  }
-
-  /** `__blk` = #{q ∈ `__bnds` : orderCol > q} via a codegen'd binary search
+  /** `__blk` = #{q ∈ `bnds` : orderCol > q} via a codegen'd binary search
     * over the SORTED bounds array, replacing the original
     * `size(filter(__bnds, q -> orderCol > q))`: higher-order functions are
     * interpreted per element (measured r14 at sf0.1: the filter() form
@@ -847,10 +810,14 @@ object Graft {
     * over the ascending bounds (duplicates included), so the classic
     * power-of-two descent finds max{i : p(i)} exactly — bit-identical to
     * the filter() count, including the edge cases: a NULL orderCol or NULL
-    * `__bnds` fails every comparison and lands in block 0, exactly like
-    * the old coalesce(size(filter(...)), 0). Consumes and drops `__bnds`. */
-  private def searchBlock(df: DataFrame, orderCol: String, len: Int): DataFrame = {
-    require(len >= 1, s"searchBlock needs at least one bound, got $len")
+    * bounds array fails every comparison and lands in block 0, exactly like
+    * the old coalesce(size(filter(...)), 0). `bnds` is the bounds array —
+    * a FOLDABLE literal of driver-local bounds in the ungrouped scans, the
+    * joined `__bnds` column in the grouped one — and `len` its length; no
+    * bounds (an empty input's null sketch) puts every row in block 0. */
+  private def searchBlock(df: DataFrame, orderCol: String, bnds: Column,
+      len: Int): DataFrame = {
+    if (len == 0) return df.withColumn("__blk", lit(0))
     val steps = Iterator.iterate(Integer.highestOneBit(len))(_ / 2)
       .takeWhile(_ >= 1).toSeq
     val withPos = steps.zipWithIndex.foldLeft(df.withColumn("__bs0", lit(0))) {
@@ -858,11 +825,11 @@ object Graft {
         val cand = col(s"__bs$i") + lit(step)
         acc.withColumn(s"__bs${i + 1}",
           when(cand <= lit(len) &&
-              col(orderCol) > element_at(col("__bnds"), cand.cast("int")),
+              col(orderCol) > element_at(bnds, cand.cast("int")),
             cand).otherwise(col(s"__bs$i")))
     }
     withPos.withColumn("__blk", col(s"__bs${steps.size}").cast("int"))
-      .drop("__bnds" +: (0 to steps.size).map(i => s"__bs$i"): _*)
+      .drop((0 to steps.size).map(i => s"__bs$i"): _*)
   }
 
   /** Opt-in input validation for the prefix scans: set session conf
@@ -915,7 +882,7 @@ object Graft {
     * eager aggregation pass instead of one per derived statistic. */
   private def prefixSumWith(df: DataFrame, orderCol: String,
       valueCols: Seq[String], suffix: String, bnds: Seq[Any]): DataFrame = {
-    val blocked = searchBlockLit(df, orderCol, bnds)
+    val blocked = searchBlock(df, orderCol, array(bnds.map(lit): _*), bnds.size)
     val wLoc = Window.partitionBy("__blk").orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wOff = Window.orderBy("__blk")
@@ -994,10 +961,8 @@ object Graft {
     val boundsAgg = df.groupBy(gc: _*).agg(cuts.as("__bnds"))
     // per-group bounds memoized like [[collectBounds]] (same key shape,
     // same balance-only invariant; Rows are plain values)
-    val bKey = (System.identityHashCode(df.sparkSession),
-      df.queryExecution.analyzed.canonicalized.semanticHash(),
-      groupCols.mkString(",") + "|" + orderCol, n)
-    val bRows = groupBoundsMemo.getOrElseUpdate(bKey, boundsAgg.collect())
+    val bRows = graft.Tables.value(df.sparkSession,
+      boundsKey(df, groupCols.mkString(",") + "|" + orderCol, n))(boundsAgg.collect())
     val bounds = df.sparkSession.createDataFrame(
         java.util.Arrays.asList(bRows: _*), boundsAgg.schema)
       .select(groupCols.zipWithIndex.map { case (c, i) =>
@@ -1006,8 +971,9 @@ object Graft {
       .map { case (c, i) => col(c) <=> col(s"__bg$i") }.reduce(_ && _)
     // same codegen'd binary search as [[searchBlock]] (the per-group
     // bounds arrive via the group-key join instead of a crossJoin)
-    val blocked = searchBlock(df.join(broadcast(bounds), bCond), orderCol, n - 1)
-      .drop(groupCols.indices.map(i => s"__bg$i"): _*)
+    val blocked = searchBlock(df.join(broadcast(bounds), bCond), orderCol,
+        col("__bnds"), n - 1)
+      .drop("__bnds" +: groupCols.indices.map(i => s"__bg$i"): _*)
     val gbc = (groupCols :+ "__blk").map(col)
     val wLoc = Window.partitionBy(gbc: _*).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1100,11 +1066,12 @@ object Graft {
     * fewer. Values are bit-identical — same addends, same divisions.
     *
     * A CACHED support (q145's session memo) keeps that job's bounds and
-    * totals in the session's [[collectBounds]] memo, so a repeated
-    * construction runs no Spark job. Totals are values, not balance, so
-    * they are only memoized while the input is cached: its data cannot
-    * change until it is unpersisted, and Tables.release, which unpersists
-    * the memo views, drops these entries with them. */
+    * totals in the session's value memo, beside [[collectBounds]]'
+    * entries, so a repeated construction runs no Spark job. Totals are
+    * values, not balance, so they are only memoized while the input is
+    * cached: its data cannot change until it is unpersisted, and
+    * Tables.release, which unpersists the memo views, drops these
+    * entries with them. */
   def ksStatisticOnSupport(pv: DataFrame): DataFrame = {
     val (n, cuts) = blockCuts(pv, "__v")
     def eager: Seq[Any] = {
@@ -1114,8 +1081,7 @@ object Graft {
     }
     val Seq(bnds: Seq[Any] @unchecked, nA, nB) =
       if (pv.storageLevel == org.apache.spark.storage.StorageLevel.NONE) eager
-      else boundsMemo.getOrElseUpdate((System.identityHashCode(pv.sparkSession),
-        pv.queryExecution.analyzed.canonicalized.semanticHash(), "__v:ks", n), eager)
+      else graft.Tables.value(pv.sparkSession, boundsKey(pv, "__v:ks", n))(eager)
     prefixSumWith(pv, "__v", Seq("__c1", "__c2"), "_cum", bnds)
       .agg(max(abs(
         col("__c1_cum").cast("double") / lit(nA).cast("double") -

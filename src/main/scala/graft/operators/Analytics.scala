@@ -987,7 +987,7 @@ object Analytics {
     val supY = graft.Tables.memoized(s, d, "spearmanSup_y") {
       base.groupBy("rf", "y").agg(count(lit(1)).as("t"))
     }
-    val ySmall = graft.Tables.memoizedFlag(s, d, "spearmanSupYSmall") {
+    val ySmall = graft.Tables.value(s, graft.Tables.memoName(d, "spearmanSupYSmall")) {
       supY.count() <= RankBroadcastMaxRows
     }
     val yRanks = fracRanks("y")
@@ -1522,7 +1522,7 @@ object Analytics {
     // form), shuffled-hash beyond RankBroadcastMaxRows
     // (1M rows ≈ 120 MB built — still far under executor memory).
     val rankedSide = ranked.select("v", "fr")
-    val supSmall = graft.Tables.memoizedFlag(s, d, "kruskalSupSmall") {
+    val supSmall = graft.Tables.value(s, graft.Tables.memoName(d, "kruskalSupSmall")) {
       sup.count() <= RankBroadcastMaxRows
     }
     val per = cells.join(

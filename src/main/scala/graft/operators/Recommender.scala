@@ -162,12 +162,12 @@ object Recommender {
     * corpus ≡ crash-free, ids mapped back into the original universe).
     *
     * The id range is a CORPUS property, so the probe is memoized per
-    * (session, sfDir) via [[graft.Tables.memoizedFlag]] — r12's verdict
+    * (session, sfDir) via [[graft.Tables.value]] — r12's verdict
     * measured the per-invocation min/max agg at ~0.6–0.8 s each on
     * q65/q66 per bench pass; now it is one job per session per corpus
-    * and a conf read thereafter. */
+    * and a memo read thereafter. */
   private def idsFitInt(s: SparkSession, d: String, r: DataFrame): Boolean =
-    graft.Tables.memoizedFlag(s, d, "alsIdsFitInt") {
+    graft.Tables.value(s, graft.Tables.memoName(d, "alsIdsFitInt")) {
       val row = r.agg(min("user_id"), max("user_id"), min("item"), max("item")).head()
       (0 until 4).forall { i =>
         row.isNullAt(i) || {

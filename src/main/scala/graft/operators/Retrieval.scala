@@ -403,7 +403,7 @@ object Retrieval {
     * histogram-CDF sketch ([[quantileNormSketch]]) beyond it. The switch
     * reads [[graft.Tables.memoizedCount]]: one metadata-cheap count job
     * the FIRST time any facade sizes this (session, sfDir), a driver-local
-    * conf read (zero jobs) on every call after — so repeat invocations
+    * memo read (zero jobs) on every call after — so repeat invocations
     * (bench steady state, a pipeline calling q209 per batch) add no
     * probe work at all. The default keeps every correctness/bench SF and
     * the ×10/×100 scaling decades exact (500 / 2 k / 20 k / 200 k

@@ -52,7 +52,7 @@ object TextPipeline {
         expr("filter(split(lower(text), ' '), w -> w != '')").as("words")
       val raw = base.select(cols: _*)
       graft.Tables.spreadNarrow(s, raw, col("doc_id"),
-        graft.Tables.memoizedLong(s, d, "tokencount") {
+        graft.Tables.value(s, graft.Tables.memoName(d, "tokencount")) {
           documents(s, d).agg(coalesce(sum(
             size(expr("filter(split(lower(text), ' '), w -> w != '')"))
               .cast("long")), lit(0L))).head().getLong(0)

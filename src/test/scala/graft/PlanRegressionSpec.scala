@@ -442,30 +442,41 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(memoViews(s2).isEmpty, "release left memo views behind")
     assert(memoViews(s).nonEmpty, "release touched another session's views")
     assert(Tables.events(s2, d).count() == 1000, "rebuild after release failed")
-    // rowcount memos live in the session RuntimeConfig (r12, q209's size
-    // probe); release() must clear those too, and only in its own session
-    val rcKey = Tables.rowCountKey(d, "embeddings")
+    // row counts (q209's size probe) live in the session's value memo;
+    // release() must clear them too, and only in its own session
+    val rcKey = Tables.memoName(d, "rows_embeddings")
     Tables.memoizedCount(s, d, "embeddings")
     Tables.memoizedCount(s2, d, "embeddings")
     Tables.release(s2)
-    assert(s2.conf.getOption(rcKey).isEmpty,
-      "release left rowcount conf memos behind")
-    assert(s.conf.getOption(rcKey).nonEmpty,
+    assert(!Tables.valueKeys(s2).contains(rcKey),
+      "release left rowcount memos behind")
+    assert(Tables.valueKeys(s).contains(rcKey),
       "release cleared another session's rowcount memo")
-    // flag memos (r13, the ALS id-range probe) share the conf-memo
-    // lifecycle: computed once, conf-read after, cleared by release
+    // flags (the ALS id-range probe) share the value memo's lifecycle:
+    // computed once, memo-read after, cleared by release
     var evals = 0
-    def probe() = Tables.memoizedFlag(s2, d, "relTestFlag") { evals += 1; true }
+    def probe() = Tables.value(s2, Tables.memoName(d, "relTestFlag")) { evals += 1; true }
     assert(probe() && probe() && evals == 1,
-      "flag memo must compute once and conf-read after")
+      "flag memo must compute once and memo-read after")
+    assert(!Tables.valueKeys(s).contains(Tables.memoName(d, "relTestFlag")),
+      "a flag memo leaked into another session")
     Tables.release(s2)
     assert(probe() && evals == 2, "release must clear flag memos")
+    // prefix-scan bounds: an entry made in s2 is invisible to s, and
+    // release(s2) drops it
+    graft.api.Graft.prefixSum(s2.range(137).toDF("__relx").withColumn("__relv", lit(1L)),
+      "__relx", Seq("__relv"))
+    val bounds = Tables.valueKeys(s2).filter(_.startsWith("bounds."))
+    assert(bounds.nonEmpty, "prefixSum made no bounds entry")
+    assert((bounds & Tables.valueKeys(s)).isEmpty, "a bounds memo leaked into another session")
+    Tables.release(s2)
+    assert((bounds & Tables.valueKeys(s2)).isEmpty, "release left bounds memos behind")
   }
 
   test("schema memo: a rewritten table reads its new schema, release forgets, nanosAsLong keys apart") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_schema_memo")
     val s2 = s.newSession()
-    def schemaKeys = s2.conf.getAll.keys.filter(_.startsWith("graft.memo.schema.")).toSet
+    def schemaKeys = Tables.valueKeys(s2).filter(_.startsWith("graft_memo_schema_"))
     // one parquet file per version, copied over the same table path — the
     // single-file layout of the corpora
     def version(name: String, df: org.apache.spark.sql.DataFrame) = {

@@ -287,36 +287,56 @@ class RetrievalSpec extends AnyFunSuite {
       "facade must take the sketch branch above the threshold")
   }
 
-  test("rankNormalize's size probe memoizes: repeat calls are conf reads, not count jobs") {
+  test("rankNormalize's size probe memoizes: repeat calls run no count job") {
     // r11 verdict task #3: the facade used to run a parquet count job on
-    // EVERY invocation to pick exact-vs-sketch. memoizedCount parks the
-    // cardinality in the session RuntimeConfig; prove repeat calls read
-    // the conf (zero jobs) by poisoning the memo and watching the facade
-    // obey the poisoned value — it could only do that via the conf.
+    // EVERY invocation to pick exact-vs-sketch. memoizedCount keeps the
+    // cardinality in the session's value memo; prove repeat calls read
+    // the memo: once both branches have been built, building them again
+    // (and re-reading the count) runs zero Spark jobs
     val real = graft.Tables.memoizedCount(s, d, "embeddings")
     assert(real == Tables.embeddings(s, d).count(), "memoized count wrong")
-    // the exact key for THIS (sfDir, table) — other suites may have
-    // memoized equal counts for other corpora, so never search by value
-    val key = graft.Tables.rowCountKey(d, "embeddings")
-    assert(s.conf.getOption(key).contains(real.toString),
-      "rowcount memo key not found in session conf")
-    try {
-      s.conf.set(key, (2000000L).toString) // pretend ×1000-decade corpus
-      assert(graft.Tables.memoizedCount(s, d, "embeddings") == 2000000L,
-        "repeat memoizedCount must be a conf read — it recounted")
-      // and the facade's path choice flows through the same memo: with the
-      // poisoned count above the default threshold it must pick the sketch
-      // canonicalized plans normalize exprIds, so two independent builds
-      // of the same logical plan compare equal
-      val poisoned = operators.Retrieval.rankNormalize(s, d)
-        .queryExecution.analyzed.canonicalized
-      val sketch = operators.Retrieval.quantileNormSketch(s, d)
-        .queryExecution.analyzed.canonicalized
-      val exact = operators.Retrieval.quantileNormExact(s, d)
-        .queryExecution.analyzed.canonicalized
-      assert(poisoned == sketch && poisoned != exact,
-        "facade ignored the memoized cardinality")
-    } finally s.conf.set(key, real.toString)
+    def build() = (graft.Tables.memoizedCount(s, d, "embeddings"),
+      operators.Retrieval.rankNormalize(s, d, sketchAboveVectors = real - 1),
+      operators.Retrieval.rankNormalize(s, d, sketchAboveVectors = real))
+    build()
+    val sc = s.sparkContext
+    val groups = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("sizeprobe")).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    val (count, above, atThreshold) = try {
+      sc.setJobGroup("sizeprobe", "repeat build")
+      val built = build()
+      // listener events arrive in order: once this job's start is seen,
+      // every earlier one has been delivered
+      sc.setJobGroup("sizeprobe~end", "end")
+      s.range(1).count()
+      val deadline = System.nanoTime() + 60000000000L
+      while (!groups.contains("sizeprobe~end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("sizeprobe~end"), "listener never saw the end marker job")
+      built
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!groups.contains("sizeprobe"),
+      "repeat memoizedCount / facade build ran a Spark job — it recounted")
+    assert(count == real, "repeat memoizedCount changed value")
+    // and the facade's path choice flows through the same count: above
+    // the threshold it must pick the sketch, at it the exact plan
+    // (canonicalized plans normalize exprIds, so two independent builds
+    // of the same logical plan compare equal)
+    val sketch = operators.Retrieval.quantileNormSketch(s, d)
+      .queryExecution.analyzed.canonicalized
+    val exact = operators.Retrieval.quantileNormExact(s, d)
+      .queryExecution.analyzed.canonicalized
+    assert(above.queryExecution.analyzed.canonicalized == sketch &&
+      atThreshold.queryExecution.analyzed.canonicalized == exact && sketch != exact,
+      "facade ignored the memoized cardinality")
   }
 
   test("q264 degenerate: collinear features null the betas but keep the scores") {
