@@ -33,9 +33,7 @@ object Probe {
     * budget skip them for test time; each has its own plan or
     * quantitative coverage. */
   val constructionJobKeys: Set[String] = Set("q65_als_recommend", "q66_als_rmse",
-    "q70_dedup_near_minhash", "q93_dedup_components", "q101_dedup_cluster_keep",
-    "q105_curation_pipeline", "q113_item_pagerank", "q252_pca_power",
-    "q264_logreg_step")
+    "q113_item_pagerank", "q252_pca_power", "q264_logreg_step")
 
   /** The plan operators the full-inventory audit counts. */
   val interesting: Seq[String] = Seq("BroadcastNestedLoopJoin",

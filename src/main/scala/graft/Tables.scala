@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.collection.concurrent.TrieMap
 
 /** Shared table loaders + cross-engine determinism helpers (SURVEY.md §1, §2.9).
@@ -13,8 +17,9 @@ import scala.collection.concurrent.TrieMap
   * session-scoped cached views ([[memoizedView]]); driver-side facts —
   * row counts, corpus flags, base-table schemas, prefix-scan bounds — sit
   * in one session-scoped value memo ([[value]]); [[release]] drops both.
-  * A base table's parquet schema is inferred once per session and file
-  * state ([[table]]), so building a query runs no Spark job. The
+  * A base table's parquet schema is read from one footer on the driver,
+  * once per session and file state ([[table]]), so building a query runs
+  * no Spark job — nor does rebuilding a memo after [[release]]. The
   * ns-timestamp recipe for `events` (SURVEY.md §1.3) is applied inside the
   * loader so every query that touches events is safe regardless of
   * session configs.
@@ -22,15 +27,15 @@ import scala.collection.concurrent.TrieMap
 object Tables {
 
   /** A base table as a fresh parquet relation. `spark.read.parquet` runs a
-    * schema-inference Spark job on every call; here the inferred schema is
-    * kept in the session's [[value]] memo (dropped by [[release]]) and
-    * later reads pass it to `spark.read.schema`, which runs no job. The
-    * memo key holds, beside (sfDir, name):
+    * schema-inference Spark job on every call; here the schema is read once
+    * on the driver ([[footerSchema]]), kept in the session's [[value]] memo
+    * (dropped by [[release]]), and passed to `spark.read.schema`, which
+    * runs no job. The memo key holds, beside (sfDir, name):
     *  - the newest modification time and the total length of the path's
     *    entries, from one driver-local listing, so a table rewritten in
-    *    place (one file, or any part file of a directory) is inferred anew;
+    *    place (one file, or any part file of a directory) is read anew;
     *  - `spark.sql.legacy.parquet.nanosAsLong`, which decides whether a
-    *    timestamp[ns] column infers as LONG (see [[events]]).
+    *    timestamp[ns] column reads as LONG (see [[events]]).
     * Every call still builds a new relation with fresh attribute ids, so
     * self-joins and plans are exactly those of a plain parquet read. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
@@ -40,8 +45,42 @@ object Tables {
     val key = s"${memoName(sfDir, s"schema_$name")}." +
       s"${files.map(_.getModificationTime).foldLeft(0L)(math.max)}." +
       s"${files.map(_.getLen).sum}.$nanos"
-    spark.read.schema(value(spark, key)(spark.read.parquet(path.toString).schema))
+    spark.read.schema(value(spark, key)(footerSchema(spark, path, files)))
       .parquet(path.toString)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers with mergeSchema off,
+    * read on the driver from ONE footer instead of by a Spark job. Spark
+    * reads the footer of `_common_metadata`, else `_metadata`, else the
+    * first visible data file by path (its file index hides `_`- and
+    * `.`-prefixed names but keeps the two summaries); the schema is the
+    * footer's Spark row metadata if present, else its parquet schema
+    * converted under the session's conf (`nanosAsLong`, the NTZ and
+    * binary-as-string flags). A directory with subdirectories (a
+    * partitioned layout) falls back to Spark's own inference.
+    * `files` is `listStatus(path)`. */
+  private[graft] def footerSchema(spark: SparkSession, path: Path,
+      files: Array[FileStatus]): StructType = {
+    def listed(n: String) = n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    val visible = files.filter { f =>
+      val n = f.getPath.getName
+      listed(n) || !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    }.sortBy(_.getPath.toString)
+    val named = (n: String) => visible.find(_.getPath.getName == n)
+    val pick = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(visible.find(f => !listed(f.getPath.getName)))
+    pick match {
+      case Some(f) if !visible.exists(_.isDirectory) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f,
+          spark.sessionState.newHadoopConf()))
+        val meta = try reader.getFooter.getFileMetaData finally reader.close()
+        Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+          .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+            .convert(meta.getSchema))
+      case _ => spark.read.parquet(path.toString).schema
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
@@ -142,7 +181,7 @@ object Tables {
   /** Drop this session's memoized views and unpersist their cached data,
     * and forget its [[value]] memo — row counts, flags, bounds and the
     * base-table schemas [[table]] keeps, so the next read of each table
-    * infers its schema again. Note Spark's CacheManager is context-shared:
+    * reads its schema again. Note Spark's CacheManager is context-shared:
     * unpersisting here also evicts any other session's identical
     * (same-plan) cache entry. That cross-session evict is
     * correctness-safe — the other session's memo
@@ -203,14 +242,21 @@ object Tables {
     * TIMESTAMP_NTZ). The loader normalizes either schema to the same
     * contract: `ts` = long ns since epoch for exact integer arithmetic in
     * gap/session/day-bucket queries, `tsc` = TIMESTAMP_NTZ so comparisons
-    * round-trip identically to DuckDB's naive TIMESTAMP (session TZ is UTC;
-    * no row carries sub-microsecond precision, so both directions are
-    * lossless).
+    * round-trip identically to DuckDB's naive TIMESTAMP (no row carries
+    * sub-microsecond precision, so both directions are lossless).
+    *
+    * The memo caches ONE timestamp, `ts`: each of the two took a quarter
+    * of the cached bytes, and the second is one add away from the first.
+    * `tsc` is a projection above the cached view (still the last column):
+    * `ts div 1000` microseconds added to the naive epoch, a TIMESTAMP_NTZ
+    * addition that reads no session time zone — unlike a route through a
+    * zoned TIMESTAMP, which gives a different civil value under each
+    * session zone. So a call on a warm memo sets no session conf.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame =
     memoized(spark, sfDir, "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The ns rebuild below casts NTZ -> LTZ -> unix_micros, which reads
+      // The µs rebuild below casts NTZ -> LTZ -> unix_micros, which reads
       // the session timezone; pin it UTC for the duration of plan
       // ANALYSIS (Spark bakes the session timezone into timezone-aware
       // expressions when the Dataset is built — the cached plan keeps
@@ -224,19 +270,18 @@ object Tables {
       spreadNarrow(spark, raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           // ns-as-long schema (timestamp[ns] parquet under the legacy flag,
-          // and hand-built long fixtures): derive the civil timestamp.
-          raw.withColumn("tsc",
-            expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"))
+          // and hand-built long fixtures): `ts` is already the contract.
+          raw
         case org.apache.spark.sql.types.TimestampType |
              org.apache.spark.sql.types.TimestampNTZType =>
-          // timestamp[us] schema (driver testdata since 2026-08-13): keep the
-          // civil value as tsc and rebuild the long-ns `ts` the integer
-          // arithmetic downstream (gap/session/day-bucket queries) contracts
-          // on. Session TZ is pinned UTC just above, so
-          // cast(ntz -> ltz) -> unix_micros is the exact epoch value DuckDB's
-          // epoch_us(ts) computes on the same naive column.
-          raw.withColumn("tsc", col("ts").cast("timestamp_ntz"))
-            .withColumn("ts", expr("unix_micros(cast(tsc as timestamp)) * 1000L"))
+          // timestamp[us] schema (driver testdata since 2026-08-13): rebuild
+          // the long-ns `ts` the integer arithmetic downstream
+          // (gap/session/day-bucket queries) contracts on. Session TZ is
+          // pinned UTC just above, so cast(ntz -> ltz) -> unix_micros is
+          // the exact epoch value DuckDB's epoch_us(ts) computes on the
+          // same naive column.
+          raw.withColumn("ts",
+            expr("unix_micros(cast(cast(ts as timestamp_ntz) as timestamp)) * 1000L"))
         case other =>
           // Fail LOUDLY on schema drift: a string/int/decimal ts silently
           // cast to timestamp would yield null ts/tsc in every downstream
@@ -251,7 +296,8 @@ object Tables {
           case None => spark.conf.unset("spark.sql.session.timeZone")
         }
       }
-    }
+    }.withColumn("tsc", expr(
+      "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ'1970-01-01 00:00:00')"))
 
   /** `props.$.k` as a BIGINT item id, corrupt-tolerant. Real event streams
     * carry payloads the clean testdata never shows: truncated JSON, a

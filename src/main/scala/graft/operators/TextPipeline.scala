@@ -229,24 +229,20 @@ object TextPipeline {
     * (accuracy alone hides asymmetric confusions). Exact integer counts;
     * the share is an int/int division under the 4 dp pin. Scale: q78's
     * vocabulary-profile machinery plus a lang²-sized aggregation. */
-  def q161(s: SparkSession, d: String): DataFrame = {
-    // r15 session 2: this plan references the classifier output twice
-    // (the row-normalizer `per` + the confusion agg) above the words1
-    // CACHE, where AQE never reuses exchanges — uncached, the whole q78
-    // machinery (profile window + doc-distinct join + argmax window)
-    // executed twice per run. Memo+cached once per session (≤|docs| rows
-    // of two short strings — the q145/q149 pattern).
-    val pred = graft.Tables.memoized(s, d, "langPredPairs") {
-      q78(s, d).select(col("actual_lang"), col("pred_lang"))
-    }
-    val per = pred.groupBy("actual_lang").agg(count(lit(1)).as("n_actual"))
-    pred.groupBy("actual_lang", "pred_lang").agg(count(lit(1)).as("n"))
-      .join(broadcast(per), "actual_lang")
+  def q161(s: SparkSession, d: String): DataFrame =
+    // one aggregate of the classifier, row-normalized by a window over its
+    // own rows: q78 is referenced once, so its subtree runs once without a
+    // memo (and Catalyst drops q78's ORDER BY under the aggregate). The
+    // aggregate is lang²-sized at any corpus size, so it is coalesced to
+    // one partition, which serves both the window and the sort with no
+    // further exchange.
+    q78(s, d).groupBy("actual_lang", "pred_lang").agg(count(lit(1)).as("n"))
+      .coalesce(1)
+      .withColumn("n_actual", sum("n").over(Window.partitionBy("actual_lang")))
       .select(col("actual_lang"), col("pred_lang"), col("n"),
         r4(col("n").cast("double") / col("n_actual").cast("double"))
           .as("share"))
       .orderBy("actual_lang", "pred_lang")
-  }
 
   /** Quality scoring: length/punctuation/stopword ratios combined into a
     * [0,1] score ([[graft.api.Graft.qualityScore]], with its two ratios

@@ -71,13 +71,28 @@ class GraftApiSpec extends AnyFunSuite {
     assert(api.except(q32).isEmpty && q32.except(api).isEmpty)
   }
 
-  test("dedupFirst reproduces q44 (first event per user+type)") {
-    val api = Graft.dedupFirst(Tables.events(s, d),
-        Seq("user_id", "event_type"), Seq(expr("ts div 1000"), col("event_id")))
-      .select("user_id", "event_type", "event_id")
-    val q44 = operators.SetOps.q44(s, d).select("user_id", "event_type", "event_id")
-    assert(api.except(q44).isEmpty && q44.except(api).isEmpty)
+  test("dedupFirst law: equals a driver first-per-key (null keys, null and tied orders)") {
+    // the first row per (k1, k2) under (o asc nulls first, id): null keys
+    // group together, o ties fall to the id
+    val sp = s
+    import sp.implicits._
+    val rnd = new scala.util.Random(44)
+    for (trial <- 0 until 4) {
+      val rows = (0 until 10 + rnd.nextInt(60)).map { i =>
+        (if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(4)),
+          Seq("a", "b")(rnd.nextInt(2)),
+          if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(5).toLong), i.toLong)
+      }
+      val api = Graft.dedupFirst(rows.toDF("k1", "k2", "o", "id"), Seq("k1", "k2"),
+          Seq(col("o"), col("id")))
+        .select("k1", "k2", "id").collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getString(1), r.getLong(2))).toSet
+      val ref = rows.groupBy(r => (r._1, r._2)).values
+        .map(_.minBy(r => (r._3, r._4))).map(r => (r._1, r._2, r._4)).toSet
+      assert(api == ref, s"trial $trial: $rows")
+    }
   }
+
 
   test("hashSample reproduces q94's stratified kept-set") {
     val api = Graft.hashSample(Tables.documents(s, d),
@@ -134,14 +149,36 @@ class GraftApiSpec extends AnyFunSuite {
     }
   }
 
-  test("packSequences reproduces q96's chunk assignment") {
-    val toks = Tables.documents(s, d).select(col("doc_id"), col("source"),
-      regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens"))
-    val api = Graft.packSequences(toks, "source", "doc_id", "tokens", 2048L)
-      .select("source", "doc_id", "chunk_id")
-    val q96 = operators.Curation.q96(s, d).select("source", "doc_id", "chunk_id")
-    assert(api.except(q96).isEmpty && q96.except(api).isEmpty)
+  test("packSequences law: equals a driver running chunk count (nulls, tied orders)") {
+    // rows tied on the order column carry equal tokens, so the running
+    // count they see is the same whichever goes first: the multiset of
+    // (group, order, tokens, cum_tokens, chunk) is exact
+    val sp = s
+    import sp.implicits._
+    val rnd = new scala.util.Random(96)
+    val budget = 8L
+    for (trial <- 0 until 4) {
+      val rows = (0 until 10 + rnd.nextInt(50)).map { _ =>
+        val o = rnd.nextInt(15).toLong
+        (if (rnd.nextInt(7) == 0) None else Some(Seq("x", "y")(rnd.nextInt(2))), o,
+          if (o % 5 == 3) None else Some((o * 7 + 3) % 6))
+      }
+      val api = Graft.packSequences(rows.toDF("g", "o", "tok"), "g", "o", "tok", budget)
+        .select("g", "o", "tok", "cum_tokens", "chunk_id").collect()
+        .map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+      val ref = rows.groupBy(_._1).values.flatMap { g =>
+        val sorted = g.sortBy(_._2)
+        val cums = sorted.scanLeft(Option.empty[Long]) { (c, r) =>
+          r._3.map(t => c.getOrElse(0L) + t).orElse(c) }.tail
+        sorted.zip(cums).map { case ((grp, o, tok), cum) =>
+          val chunk = for (c <- cum; t <- tok) yield math.floor((c - t).toDouble / budget).toLong
+          Seq(grp, Some(o), tok, cum, chunk).map(_.fold("null")(_.toString))
+        }
+      }.toSeq.sortBy(_.mkString("|"))
+      assert(api == ref, s"trial $trial: $rows")
+    }
   }
+
 
   test("applyChanges: latest-wins upsert keeps newest version per key") {
     val sp = TestSpark.spark
@@ -220,17 +257,38 @@ class GraftApiSpec extends AnyFunSuite {
     assert(api.collect().toSeq == q100.collect().toSeq) // order matters (ranking)
   }
 
-  test("quantizeInt reproduces q102's codes, scale and rmse") {
-    val api = Graft.quantizeInt(
-        Tables.embeddings(s, d)
-          .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v")),
-        "v", levels = 127)
-      .select(col("vec_id"), col("scale"),
-        expr("array_join(transform(codes, qi -> CAST(qi AS STRING)), ',')").as("qsig"),
-        Tables.rnd(col("rmse"), 6).as("rmse"))
-    val q102 = operators.Retrieval.q102(s, d)
-    assert(api.except(q102).isEmpty && q102.except(api).isEmpty)
+  test("quantizeInt law: equals a driver quantizer (null vector, half-step ties)") {
+    val sp = s
+    import sp.implicits._
+    val rnd = new scala.util.Random(102)
+    // with levels 4 and max|x| 4 the scale is 1, so ±0.5 and 1.5 sit
+    // exactly on half steps (round half up), and ±4 tie for the max
+    val fixed: Seq[Option[Seq[Double]]] = Seq(None, Some(Seq(0.0, 0.0)),
+      Some(Seq(4.0, -4.0, 0.5, -0.5, 1.5, -1.5)))
+    val random = Seq.fill(12)(Some(Seq.fill(1 + rnd.nextInt(8))(rnd.nextGaussian() * 3)))
+    val vecs = (fixed ++ random).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    for (levels <- Seq(4, 127)) {
+      val api = Graft.quantizeInt(vecs.toDF("id", "v"), "v", levels)
+        .select("id", "scale", "codes", "rmse").collect()
+        .map(r => r.getLong(0) -> Seq(String.valueOf(r.get(1)),
+          Option(r.getSeq[Long](2)).fold("null")(_.mkString(",")), String.valueOf(r.get(3))))
+        .toMap
+      vecs.foreach { case (id, v) =>
+        val ref = v match {
+          case None => Seq("null", "null", "null")
+          case Some(xs) =>
+            val scale = xs.foldLeft(0.0)((a, x) => math.max(a, math.abs(x))) / levels
+            val codes = xs.map(x => if (scale == 0.0) 0L
+              else math.max(-levels.toLong, math.min(levels.toLong, math.floor(x / scale + 0.5).toLong)))
+            val sq = xs.zip(codes).foldLeft(0.0) { case (a, (x, q)) =>
+              val e = x - q.toDouble * scale; a + e * e }
+            Seq(scale.toString, codes.mkString(","), math.sqrt(sq / xs.size.toDouble).toString)
+        }
+        assert(api(id) == ref, s"levels $levels, vector $v")
+      }
+    }
   }
+
 
   test("rpLshBucket reproduces q103's bucket assignment") {
     val api = Graft.rpLshBucket(Tables.embeddings(s, d), "embedding",
@@ -291,18 +349,31 @@ class GraftApiSpec extends AnyFunSuite {
     assert(api.except(q106).isEmpty && q106.except(api).isEmpty)
   }
 
-  test("tokenBudgetFill reproduces q109's kept set") {
-    val t = s.read.parquet(s"$d/documents.parquet")
-      .select(col("doc_id"), col("source"),
-        regexp_count(col("text"), lit("[a-z0-9]+|[^a-z0-9\\s]")).cast("long").as("tokens"),
-        substring(sha2(col("doc_id").cast("string"), 256), 1, 8).as("hb"))
-      // orderCol is a single column: hb ties are broken by appending the id
-      .withColumn("ord", concat(col("hb"), lpad(col("doc_id").cast("string"), 12, "0")))
-    val api = Graft.tokenBudgetFill(t, "source", Seq(col("ord")), "tokens", 1024L)
-      .select("source", "doc_id", "tokens")
-    val q109 = operators.Curation.q109(s, d).select("source", "doc_id", "tokens")
-    assert(api.except(q109).isEmpty && q109.except(api).isEmpty)
+  test("tokenBudgetFill law: equals a driver greedy fill (nulls, tied orders)") {
+    // keep a row while the tokens before it (nulls add nothing) stay
+    // under the budget; a null-token row is never kept; o ties fall to id
+    val sp = s
+    import sp.implicits._
+    val rnd = new scala.util.Random(109)
+    val budget = 10L
+    for (trial <- 0 until 4) {
+      val rows = (0 until 10 + rnd.nextInt(50)).map { i =>
+        (if (rnd.nextInt(7) == 0) None else Some(Seq("x", "y")(rnd.nextInt(2))),
+          if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(6).toLong), i.toLong,
+          if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(5).toLong))
+      }
+      val api = Graft.tokenBudgetFill(rows.toDF("g", "o", "id", "tok"), "g",
+          Seq(col("o"), col("id")), "tok", budget)
+        .select("id").as[Long].collect().toSet
+      val ref = rows.groupBy(_._1).values.flatMap { g =>
+        val sorted = g.sortBy(r => (r._2, r._3))
+        val before = sorted.scanLeft(0L)((c, r) => c + r._4.getOrElse(0L))
+        sorted.zip(before).collect { case (r, b) if r._4.isDefined && b < budget => r._3 }
+      }.toSet
+      assert(api == ref, s"trial $trial: $rows")
+    }
   }
+
 
   test("cooccurrencePmi reproduces q107 after rounding and ranking") {
     val api = Graft.cooccurrencePmi(

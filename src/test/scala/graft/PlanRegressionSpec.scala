@@ -578,6 +578,88 @@ class PlanRegressionSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables.events: the memo caches ts only; tsc is derived the same under any session zone") {
+    // one fixture per stored schema, each with pre-epoch rows (a whole
+    // second and a sub-microsecond instant before 1970)
+    val root = java.nio.file.Files.createTempDirectory("graft_tsc_fix").toString
+    val s2 = s.newSession()
+    val nsTs = Seq(1704067284496499000L, 0L, -500000000L, -1500L, 86399999999000L)
+    import s2.implicits._
+    nsTs.zipWithIndex.map { case (t, i) => (t, i.toLong, 42L + i, "view", 1.0, "{}") }
+      .toDF("ts", "event_id", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$root/ns/events.parquet")
+    s2.sql(
+      """SELECT ts, event_id, 7L AS user_id, 'view' AS event_type, 1.0e0 AS value,
+        |  '{}' AS props FROM VALUES
+        |  (TIMESTAMP_NTZ '2024-01-01 00:01:24.496499', 0L),
+        |  (TIMESTAMP_NTZ '1969-12-31 23:59:59.5', 1L),
+        |  (TIMESTAMP_NTZ '1969-12-31 23:59:59.999999', 2L),
+        |  (TIMESTAMP_NTZ '1900-03-01 12:00:00', 3L) AS v(ts, event_id)""".stripMargin)
+      .write.parquet(s"$root/us/events.parquet")
+    // the UTC `timestamp_micros(ts div 1000)` civil value, computed on the
+    // driver (Scala's `/` truncates like Spark's `div`)
+    def utcCivil(ns: Long) = java.time.LocalDateTime.ofInstant(
+      java.time.Instant.EPOCH.plus(ns / 1000, java.time.temporal.ChronoUnit.MICROS),
+      java.time.ZoneOffset.UTC)
+    try for (dir <- Seq(s"$root/ns", s"$root/us"); tz <- Seq("Asia/Kolkata", "America/Los_Angeles")) {
+      Tables.release(s2)
+      s2.conf.set("spark.sql.session.timeZone", tz)
+      val ev = Tables.events(s2, dir)
+      assert(ev.columns.last == "tsc", s"tsc must stay the last column: ${ev.columns.toSeq}")
+      assert(!s2.table(Tables.memoName(dir, "events")).columns.contains("tsc"),
+        "the events memo caches tsc beside ts")
+      val conf = s2.conf.getAll
+      val rows = Tables.events(s2, dir).select("event_id", "ts", "tsc").collect()
+      assert(s2.conf.getAll == conf, "a warm events() call changed a session conf")
+      rows.foreach { r =>
+        assert(r.getAs[java.time.LocalDateTime]("tsc") == utcCivil(r.getLong(1)),
+          s"$dir under $tz: event ${r.getLong(0)} ts=${r.getLong(1)} tsc=${r.get(2)}")
+      }
+      if (dir.endsWith("us")) assert(rows.sortBy(_.getLong(0)).map(_.get(2).toString).toSeq ==
+        Seq("2024-01-01T00:01:24.496499", "1969-12-31T23:59:59.500",
+          "1969-12-31T23:59:59.999999", "1900-03-01T12:00"),
+        s"µs fixture under $tz: ${rows.toSeq}")
+      else assert(rows.length == nsTs.length)
+    } finally {
+      s2.conf.unset("spark.sql.session.timeZone")
+      Tables.release(s2)
+    }
+  }
+
+  test("q161 reads q78's classifier once and creates no memo view of its own") {
+    val s2 = s.newSession()
+    Tables.release(s2)
+    try {
+      val before = s2.catalog.listTables().collect().map(_.name).toSet
+      operators.TextPipeline.q161(s2, d).collect()
+      val made = s2.catalog.listTables().collect().map(_.name).toSet -- before
+      assert(!made.exists(_.toLowerCase.contains("langpredpairs")),
+        s"q161 made a langPredPairs memo: $made")
+    } finally Tables.release(s2)
+  }
+
+  test("footer schema: equals spark.read.parquet's inference for every table, under both nanosAsLong values") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_footer").toString
+    val s2 = s.newSession()
+    // a Spark-written directory: several part files, _SUCCESS, .crc, and
+    // Spark's row metadata in each footer
+    s2.range(40).selectExpr("id", "cast(id as string) AS s", "array(id) AS a",
+        "named_struct('x', id * 0.5e0) AS st", "TIMESTAMP_NTZ '2024-01-01 00:00:00' AS t")
+      .repartition(3).write.parquet(s"$tmp/multi.parquet")
+    val paths = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings", "events").map(t => s"$d/$t.parquet") :+
+      s"$tmp/multi.parquet"
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    try for (v <- Seq("true", "false"); p <- paths) {
+      s2.conf.set(nanos, v)
+      val path = new org.apache.hadoop.fs.Path(p)
+      val files = path.getFileSystem(s2.sessionState.newHadoopConf()).listStatus(path)
+      // a user-given schema is read as nullable, as inference reads it
+      assert(s2.read.schema(Tables.footerSchema(s2, path, files)).parquet(p).schema ==
+        s2.read.parquet(p).schema, s"$p with $nanos=$v")
+    } finally s2.conf.unset(nanos)
+  }
+
   test("q117 gapFill: only the calendar spine is forced-broadcast; the fill join shuffles") {
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
