@@ -116,6 +116,22 @@ object Bench {
     }
   }
 
+  /** Runs `body` with `tally` registered: its outcome and its wall
+    * seconds. The clock stops before [[drainTallies]], so the drain only
+    * completes the tallies and never adds to the wall; the listener is
+    * removed however `body` ends. */
+  private[graft] def tallied[A](spark: SparkSession, tally: TaskTally)(
+      body: => A): (scala.util.Try[A], Double) = {
+    spark.sparkContext.addSparkListener(tally)
+    try {
+      val t0 = System.nanoTime()
+      val run = scala.util.Try(body)
+      val wall = (System.nanoTime() - t0) / 1e9
+      drainTallies(tally)
+      (run, wall)
+    } finally spark.sparkContext.removeSparkListener(tally)
+  }
+
   /** Third instrumented pass of one flagged key: wall time, summed
     * executor task-time, GC ms and spill bytes, plus the [[classify]]
     * verdict, as one compact JSON object string. A wall far above the
@@ -125,15 +141,9 @@ object Bench {
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       sfDir: String, baseSec: Double, steadySec: Double): String = {
     val tally = new TaskTally
-    spark.sparkContext.addSparkListener(tally)
-    val t0 = System.nanoTime()
-    val ok = try { force(fn(spark, sfDir)); true }
-             catch { case _: Throwable => false }
-    val wall = (System.nanoTime() - t0) / 1e9
-    drainTallies(tally) // poll until the async listener bus goes quiet
-    spark.sparkContext.removeSparkListener(tally)
+    val (run, wall) = tallied(spark, tally)(force(fn(spark, sfDir)))
     val verdict =
-      if (!ok) "error"
+      if (run.isFailure) "error"
       else classify(wall, baseSec, steadySec, tally.gcMs.get, tally.spillBytes.get)
     s""""$name":{"steady":${f3(steadySec)},"base":${f3(baseSec)},""" +
       s""""p3_wall":${f3(wall)},"task_sec":${f3(tally.runMs.get / 1e3)},""" +

@@ -146,24 +146,14 @@ object Probe {
           val fn = SparkEntry.queries(k)
           spark.sparkContext.setJobDescription(s"profile:$k")
           val runs = (1 to 3).map { _ =>
-            val build, tally = new Bench.TaskTally
-            var wall = 0.0
             // the build and the forced run each under their own tally;
             // the drain between them stays out of the wall
-            def tallied[A](t: Bench.TaskTally)(body: => A): A = {
-              spark.sparkContext.addSparkListener(t)
-              val t0 = System.nanoTime()
-              try body finally {
-                wall += (System.nanoTime() - t0) / 1e9
-                Bench.drainTallies(t)
-                spark.sparkContext.removeSparkListener(t)
-              }
-            }
-            try {
-              val df = tallied(build)(fn(spark, sfDir))
-              tallied(tally)(Bench.force(df))
-            } catch { case e: Throwable => System.err.println(s"[profile] $k failed: $e") }
-            (wall, build, tally)
+            val build, tally = new Bench.TaskTally
+            val (df, buildWall) = Bench.tallied(spark, build)(fn(spark, sfDir))
+            val (run, runWall) = df.fold(e => (scala.util.Failure(e), 0.0),
+              f => Bench.tallied(spark, tally)(Bench.force(f)))
+            run.failed.foreach(e => System.err.println(s"[profile] $k failed: $e"))
+            (buildWall + runWall, build, tally)
           }
           (k, runs.map(_._1).min, runs.last._2, runs.last._3)
         }

@@ -264,15 +264,11 @@ object Scale {
   private def timedTallied(spark: SparkSession,
       fn: (SparkSession, String) => DataFrame, dir: String): ProbeTally = {
     val tally = new Bench.TaskTally
-    spark.sparkContext.addSparkListener(tally)
-    val t0 = System.nanoTime()
     // Bench.force, not count(): the same full-width materialization
     // the bench times, so scaling curves measure complete results
     // (count() lets Catalyst prune terminal projections — r10)
-    Bench.force(fn(spark, dir))
-    val wall = (System.nanoTime() - t0) / 1e9
-    Bench.drainTallies(tally)
-    spark.sparkContext.removeSparkListener(tally)
+    val (run, wall) = Bench.tallied(spark, tally)(Bench.force(fn(spark, dir)))
+    run.get
     ProbeTally(wall, tally.runMs.get / 1e3, tally.gcMs.get,
       tally.spillBytes.get)
   }

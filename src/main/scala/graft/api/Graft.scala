@@ -16,11 +16,9 @@ import org.apache.spark.sql.functions._
   * (q85), packSequences (q96), bm25Rank (q100), quantizeInt (q102),
   * rpLshBucket (q103), decontaminate (q106), cooccurrencePmiOnSupport
   * (q107), nextTransitions (q108), tokenBudgetFill (q109), profile (q112),
-  * rollingDistinct (q121), equiDepthBuckets (q128), mannWhitneyOnSupport
-  * (q211), lorenzOnSupport (q224). The exception is [[spearman]]: q210
-  * keeps its own plan, whose y-side join strategy reads a per-corpus
-  * memoized size flag a facade has no corpus to key. GraftApiSpec and
-  * FacadeLawSpec check the facades on other inputs.
+  * rollingDistinct (q121), equiDepthBuckets (q128), spearmanOnSupport
+  * (q210), mannWhitneyOnSupport (q211), lorenzOnSupport (q224).
+  * GraftApiSpec and FacadeLawSpec check the facades on other inputs.
   */
 object Graft {
 
@@ -771,7 +769,14 @@ object Graft {
   /** The value-memo key of `df`'s block bounds over `cols` in `n` blocks:
     * the canonicalized plan's semanticHash, the column(s) and n. */
   private def boundsKey(df: DataFrame, cols: String, n: Int): String =
-    s"bounds.${df.queryExecution.analyzed.canonicalized.semanticHash()}.$cols.$n"
+    s"bounds.${planHash(df)}.$cols.$n"
+
+  /** The semanticHash of `df`'s canonicalized analyzed plan: equal for
+    * every rebuild of a structurally identical frame, which is what lets
+    * a facade memoize a driver-side fact about its input without a
+    * corpus to key it by. */
+  private def planHash(df: DataFrame): Int =
+    df.queryExecution.analyzed.canonicalized.semanticHash()
 
   /** The n − 1 interior cut fractions of an n-way split as SQL double
     * literals (`0.1e0,0.2e0,…,0.9e0` for n = 10) — the argument of every
@@ -1121,9 +1126,7 @@ object Graft {
     * single-valued support — or the tie correction's N(N−1) does (a
     * one-unit input). */
   def mannWhitneyOnSupport(grain: DataFrame): DataFrame = {
-    val ranked = prefixSum(grain, "__v", Seq("__t"))
-      .withColumn("__fr", (col("__t_cum") - col("__t")).cast("double") +
-        (col("__t") + 1).cast("double") / lit(2.0))
+    val ranked = tieRanks(grain, Nil, "__v", "__t", "__fr")
     ranked.agg(
       sum("__ca").as("n_a"), sum(col("__t") - col("__ca")).as("n_b"),
       sum(col("__ca") * col("__fr")).as("__ra"),
@@ -1144,41 +1147,100 @@ object Graft {
             lit(0.0))).as("z"))
   }
 
+  /** Tie-averaged (fractional) ranks over a value SUPPORT: `sup` holds one
+    * row per distinct (groupCols..., `valueCol`) with that value's row
+    * count in `countCol`, and `out` is appended — the mean of the ranks
+    * its tied rows would take, (t_cum − t) + (t + 1)/2 over the running
+    * count t_cum within the group. The running count is [[prefixSum]]'s
+    * range-blocked scan, or [[groupedPrefixSum]]'s with group columns, so
+    * no rank is ever a fact-grain or single-task window. The rank machine
+    * behind every rank statistic here: Mann–Whitney, Spearman,
+    * Kruskal–Wallis (q243) and AUC (q265). */
+  private[graft] def tieRanks(sup: DataFrame, groupCols: Seq[String],
+      valueCol: String, countCol: String, out: String): DataFrame = {
+    val cum = countCol + "_cum"
+    val scanned =
+      if (groupCols.isEmpty) prefixSum(sup, valueCol, Seq(countCol))
+      else groupedPrefixSum(sup, groupCols, valueCol, Seq(countCol))
+    scanned.withColumn(out, (col(cum) - col(countCol)).cast("double") +
+        (col(countCol) + 1).cast("double") / lit(2.0))
+      .drop(cum)
+  }
+
+  /** Largest support whose rank side [[rankSide]] broadcasts: 1M rows,
+    * about 120 MB built — far under executor memory. */
+  private val RankBroadcastMaxRows = 1000000L
+
+  /** The join side of `ranks`, which holds one row per row of its support
+    * `sup`: broadcast while the support has at most
+    * [[RankBroadcastMaxRows]] rows (the fact side then skips its
+    * shuffle), shuffled-hash beyond (no sort; a fact-proportional
+    * broadcast would be a driver OOM at 100 TB). The choice is explicit
+    * because the planner's estimate of a rank side after its prefix-scan
+    * projections can sit under the auto-broadcast threshold however big
+    * the side is. The support's row count is counted once and kept in
+    * the session's value memo under its plan hash, like
+    * [[collectBounds]]' bounds: a stale count (an input rewritten in
+    * place) can only pick the other join strategy, never change rows. */
+  private[graft] def rankSide(sup: DataFrame, ranks: DataFrame): DataFrame = {
+    val rows = graft.Tables.value(sup.sparkSession, s"rows.${planHash(sup)}")(sup.count())
+    if (rows <= RankBroadcastMaxRows) broadcast(ranks) else ranks.hint("shuffle_hash")
+  }
+
   /** Spearman rank correlation of `xCol` vs `yCol` per group: one row per
     * group (groupCols..., n, spearman), unpinned — callers round at their
-    * output edge. Weighted Pearson over SUPPORT-grain fractional ranks:
-    * each side shrinks to its distinct-value grain, tie-averaged ranks
-    * come from [[groupedPrefixSum]]'s range-block combine (parallel in
-    * groups × blocks — never one task per group), and the correlation
-    * assembles from weighted sufficient statistics on the (x, y) pair
+    * output edge. Pearson over tie-averaged ranks: each side shrinks to
+    * its (group, value) support ([[spearmanSupport]]), the ranks come from
+    * [[groupedPrefixSum]]'s range-block combine (parallel in groups ×
+    * blocks — never one task per group), and they attach at the FACT
     * grain. Pin continuous columns to a rounding grid first when
     * comparing across engines. */
   def spearman(df: DataFrame, groupCols: Seq[String],
                xCol: String, yCol: String): DataFrame = {
     require(groupCols.nonEmpty, "spearman needs group columns")
+    val base = df.select(groupCols.map(col) :+ col(xCol).as("__x") :+
+      col(yCol).as("__y"): _*)
+    spearmanOnSupport(base, groupCols, "__x", "__y",
+      spearmanSupport(base, groupCols, "__x"),
+      spearmanSupport(base, groupCols, "__y"))
+  }
+
+  /** The (groupCols..., valueCol, t) SUPPORT of one [[spearman]] side, `t`
+    * counting the rows of each value — exposed for caller-side
+    * memoization like [[ksSupport]]: the grouped scan references it three
+    * times, and AQE never deduplicates those references above a cached
+    * relation. No group or value column may be named `t`. */
+  def spearmanSupport(df: DataFrame, groupCols: Seq[String],
+                      valueCol: String): DataFrame = {
+    require(!(groupCols :+ valueCol).contains("t"),
+      "spearmanSupport counts into column t: rename the input's t first")
+    df.groupBy((groupCols :+ valueCol).map(col): _*).agg(count(lit(1)).as("t"))
+  }
+
+  /** [[spearman]] over the rows of `df` (groupCols, xCol, yCol) and their
+    * prebuilt [[spearmanSupport]] relations. Ranks attach at the fact
+    * grain — a pre-aggregated (x, y) pair grain shrinks nothing when
+    * either column is near-continuous, and costs two fact-sized hash aggs
+    * — and each rank side joins through [[rankSide]]. The rank sums sum
+    * exact half-integers; the product sums carry summation-order drift
+    * only. The coefficient is null (never 0/0) for a group whose x or y
+    * support is a single value: its rank variance is zero. */
+  def spearmanOnSupport(df: DataFrame, groupCols: Seq[String], xCol: String,
+      yCol: String, supX: DataFrame, supY: DataFrame): DataFrame = {
     val gc = groupCols.map(col)
-    val base = df.select(gc :+ col(xCol).as("__x") :+ col(yCol).as("__y"): _*)
-    def fracRanks(vc: String, out: String): DataFrame = {
-      val sup = base.groupBy(gc :+ col(vc): _*).agg(count(lit(1)).as("__t"))
-      groupedPrefixSum(sup, groupCols, vc, Seq("__t"))
-        .select(gc :+ col(vc) :+
-          (((col("__t_cum") - col("__t")).cast("double") +
-            (col("__t") + 1).cast("double") / lit(2.0)).as(out)): _*)
-    }
-    val pairs = base.groupBy(gc :+ col("__x") :+ col("__y"): _*)
-      .agg(count(lit(1)).as("__w"))
-      .join(fracRanks("__x", "__fx"), groupCols :+ "__x")
-      .join(fracRanks("__y", "__fy"), groupCols :+ "__y")
-    pairs.groupBy(gc: _*).agg(
-      sum("__w").cast("double").as("__n"),
-      sum(col("__w") * col("__fx")).as("__sx"),
-      sum(col("__w") * col("__fy")).as("__sy"),
-      sum(col("__w") * col("__fx") * col("__fy")).as("__sxy"),
-      sum(col("__w") * col("__fx") * col("__fx")).as("__sxx"),
-      sum(col("__w") * col("__fy") * col("__fy")).as("__syy"))
+    def side(sup: DataFrame, vc: String, out: String): DataFrame =
+      rankSide(sup, tieRanks(sup, groupCols, vc, "t", out)
+        .select(gc :+ col(vc) :+ col(out): _*))
+    df.join(side(supX, xCol, "__fx"), groupCols :+ xCol)
+      .join(side(supY, yCol, "__fy"), groupCols :+ yCol)
+      .groupBy(gc: _*).agg(
+        count(lit(1)).cast("double").as("__n"),
+        sum("__fx").as("__sx"),
+        sum("__fy").as("__sy"),
+        sum(col("__fx") * col("__fy")).as("__sxy"),
+        sum(col("__fx") * col("__fx")).as("__sxx"),
+        sum(col("__fy") * col("__fy")).as("__syy"))
       .select(gc :+ col("__n").cast("long").as("n") :+
-        // nullif: a group whose x or y support is a single value has zero
-        // rank variance — null, not 0/0 (as q210)
         ((col("__n") * col("__sxy") - col("__sx") * col("__sy")) /
           nullif(sqrt((col("__n") * col("__sxx") - col("__sx") * col("__sx")) *
             (col("__n") * col("__syy") - col("__sy") * col("__sy"))), lit(0.0)))

@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
   * sufficient-statistics (Σx, Σy, Σxy, Σx², n) with map-side combine.
   */
 object Analytics {
-  /** Largest rank support q210 and q243 broadcast; beyond it they join
-    * shuffled-hash. */
-  private val RankBroadcastMaxRows = 1000000L
-
   /** percent_rank / cume_dist / ntile-free quantile position per supplier. */
   def q38(s: SparkSession, d: String): DataFrame = {
     val w = Window.orderBy(col("s_acctbal").desc, col("s_suppkey"))
@@ -923,94 +919,42 @@ object Analytics {
   }
 
   /** Spearman rank correlation between quantity and discounted revenue per
-    * return flag — computed as a weighted Pearson over SUPPORT-grain
-    * fractional ranks, never a fact-grain rank window: each side shrinks
-    * to its distinct-value grain first (shrink-before-window), fractional
-    * (tie-averaged) ranks come from a cumulative count over that grain,
-    * and the correlation assembles from weighted sufficient statistics on
-    * the (x, y) pair grain.
+    * return flag: [[graft.api.Graft.spearmanOnSupport]] — tie-averaged
+    * ranks over each side's (flag, value) support, attached at the fact
+    * grain, the correlation from per-flag sums of the ranks.
     *
     * Determinism: revenue pins to the 2 dp grid BEFORE grouping so both
-    * engines build identical supports; ranks are exact half-integers and
-    * weights exact longs, so every product is an exact double and the
-    * final ratio divides near-identical sums (drift ≪ the 4 dp pin).
-    * Scale: three pruned fact passes (the pair grain + one per support
-    * build), each a map-side-combined hash agg; the supports are
-    * DOMAIN-bounded (price grid × flag) and memo+cached, and their
-    * cumulatives run through [[graft.api.Graft.groupedPrefixSum]]'s
-    * range-block combine — parallel in groups × blocks, never one task
-    * per return flag — then a pair-grain join-back and a 3-row final
-    * agg. */
-  def q210(s: SparkSession, d: String): DataFrame = {
-    val base = lineitem(s, d).select(col("l_returnflag").as("rf"),
-      col("l_quantity").as("x"),
-      r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"))
-    def fracRanks(vc: String): DataFrame = {
-      // per-group cumulative via the grouped range-block combine: the y
-      // support is wide per return flag, so a plain partitionBy(rf)
-      // window would sort each flag's whole support in ONE task. The
-      // support itself is memo+cached: it is DOMAIN-bounded (price grid ×
-      // flag — never fact-proportional), and groupedPrefixSum references
-      // its input three times (bounds, blocked rows, block totals), so
-      // without the cache each reference would re-run the fact scan+agg.
-      val sup = graft.Tables.memoized(s, d, "spearmanSup_" + vc) {
-        base.groupBy("rf", vc).agg(count(lit(1)).as("t"))
-      }
-      graft.api.Graft.groupedPrefixSum(sup, Seq("rf"), vc, Seq("t"))
-        .select(col("rf"), col(vc),
-          ((col("t_cum") - col("t")).cast("double") +
-            (col("t") + 1).cast("double") / lit(2.0)).as("fr_" + vc))
-    }
-    // r14: ranks attach at the FACT grain — the former (rf, x, y) pair
-    // pre-aggregation produced 599,885 groups from 600,000 rows at sf0.1
-    // (y is continuous, so the pair grain is fact-sized and shrinks
-    // nothing) while costing two fact-sized hash aggs plus a 28 MB
-    // exchange; worse, the planner's size estimate for the tiny x-rank
-    // side was poisoned by the 8 MB HashedRelation floor of its upstream
-    // broadcasts, so it BROADCAST THE 600 K-ROW PAIR SIDE (75 MB, ~1.1 s
-    // build; guide §3.1: estimates go wrong — hint the side you know).
-    // The x support is DOMAIN-bounded (quantity grid × flag, 150 rows at
-    // any SF) so it broadcasts by hint; the y support stays a shuffle
-    // join. Addends are the identical exact half-integer products as the
-    // weighted pair form (w·fr regroups exactly; the only inexact sums,
-    // sxy/sxx/syy, carry summation-order drift ≪ the 4 dp pin, the same
-    // class the pair form already had).
-    // r15 session 2: the y-rank side is SUPPORT-sized (594k rows at sf0.1 —
-    // the revenue grid is near-continuous, so fact-proportional at any SF)
-    // and was SMJ-joined: both the 600k-row fact AND the rank side paid a
-    // shuffle+sort. Mirror q243's explicit, data-sized strategy (guide
-    // §3.1): broadcast while the support is small (skips the fact shuffle
-    // entirely), shuffled-hash beyond RankBroadcastMaxRows
-    // (no sort; a fact-proportional broadcast would be a driver OOM at
-    // 100 TB). Join strategy never changes rows; the q210 sums already
-    // carry summation-order drift ≪ the 4 dp pin (scaladoc above).
-    val supY = graft.Tables.memoized(s, d, "spearmanSup_y") {
-      base.groupBy("rf", "y").agg(count(lit(1)).as("t"))
-    }
-    val ySmall = graft.Tables.value(s, graft.Tables.memoName(d, "spearmanSupYSmall")) {
-      supY.count() <= RankBroadcastMaxRows
-    }
-    val yRanks = fracRanks("y")
-    val scored = base
-      .join(broadcast(fracRanks("x")), Seq("rf", "x"))
-      .join(if (ySmall) broadcast(yRanks) else yRanks.hint("shuffle_hash"),
-        Seq("rf", "y"))
-    scored.groupBy("rf").agg(
-      count(lit(1)).cast("double").as("n"),
-      sum(col("fr_x")).as("sx"),
-      sum(col("fr_y")).as("sy"),
-      sum(col("fr_x") * col("fr_y")).as("sxy"),
-      sum(col("fr_x") * col("fr_x")).as("sxx"),
-      sum(col("fr_y") * col("fr_y")).as("syy"))
-      .select(col("rf"), col("n").cast("long").as("n"),
-        // nullif: a flag whose x or y support is a single value has zero
-        // rank variance — null, not 0/0 (the q207/q266 degenerate class)
-        r4((col("n") * col("sxy") - col("sx") * col("sy")) /
-          nullif(sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))),
-            lit(0.0))).as("spearman"))
+    * engines build identical supports; ranks are exact half-integers, so
+    * every product is an exact double and the final ratio divides
+    * near-identical sums (drift ≪ the 4 dp pin). Scale: the supports are
+    * memo+cached ([[spearmanSup]]); the x support is DOMAIN-bounded
+    * (quantity grid × flag, 150 rows at any SF) and broadcasts, and the
+    * y support is near-continuous (594k rows at sf0.1), so it broadcasts
+    * only while it is small and joins shuffled-hash beyond that
+    * ([[graft.api.Graft.rankSide]]). */
+  def q210(s: SparkSession, d: String): DataFrame =
+    graft.api.Graft.spearmanOnSupport(rankBase(s, d, "x", "y"), Seq("rf"), "x", "y",
+        spearmanSup(s, d, "x"), spearmanSup(s, d, "y"))
+      .select(col("rf"), col("n"), r4(col("spearman")).as("spearman"))
       .orderBy("rf")
-  }
+
+  /** Per-line return flag `rf` with the named columns of q210's fact
+    * grain: quantity `x` and 2 dp-pinned discounted revenue `y`. Only the
+    * named columns are read, so q243's revenue cells need no quantity. */
+  private def rankBase(s: SparkSession, d: String, vcs: String*): DataFrame =
+    lineitem(s, d).select(col("l_returnflag").as("rf") +: vcs.map {
+      case "x" => col("l_quantity").as("x")
+      case "y" => r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y")
+    }: _*)
+
+  /** The memo+cached (rf, `vc`, t) support of [[rankBase]]'s column `vc`:
+    * q210's rank supports, and for `y` also q243's (flag, revenue) cells.
+    * One builder per memo, so the cached relation is the same whichever
+    * key builds it first. */
+  private def spearmanSup(s: SparkSession, d: String, vc: String): DataFrame =
+    graft.Tables.memoized(s, d, "spearmanSup_" + vc) {
+      graft.api.Graft.spearmanSupport(rankBase(s, d, vc), Seq("rf"), vc)
+    }
 
   /** Mann–Whitney U (Wilcoxon rank-sum) z-test on per-user purchase spend
     * between the q140/q207 sha256 hash arms — the nonparametric companion
@@ -1497,37 +1441,17 @@ object Analytics {
     // rebuild was a full fact scan+agg). The v support (value grain
     // across flags) is memo+cached too: prefixSum references it three
     // times and the ties agg a fourth.
-    val cells = graft.Tables.memoized(s, d, "spearmanSup_y") {
-      lineitem(s, d).select(col("l_returnflag").as("rf"),
-          r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"))
-        .groupBy("rf", "y").agg(count(lit(1)).as("t"))
-    }.select(col("rf").as("g"), col("y").as("v"), col("t").as("c"))
+    val cells = spearmanSup(s, d, "y")
+      .select(col("rf").as("g"), col("y").as("v"), col("t").as("c"))
     val sup = graft.Tables.memoized(s, d, "kruskalSup") {
       cells.groupBy("v").agg(sum("c").as("t"))
     }
-    val ranked = graft.api.Graft.prefixSum(sup, "v", Seq("t"))
-      .select(col("v"), col("t"),
-        ((col("t_cum") - col("t")).cast("double") +
-          (col("t") + 1).cast("double") / lit(2.0)).as("fr"))
     // r15: the rank side is SUPPORT-sized (582k rows / 67 MB materialized
-    // at sf0.1 — fact-proportional at any SF since the revenue grid is
-    // near-continuous), but its size ESTIMATE after the prefix projections
-    // sat under the auto-broadcast threshold, so the planner silently
-    // built a 67 MB broadcast hash relation — the q210 mis-broadcast
-    // class, mirrored, and a driver OOM at 100 TB (guide §3.1: pick the
-    // strategy deliberately). The choice is now EXPLICIT and sized to the
-    // data (the q209 adaptive-facade pattern): broadcast while the
-    // support is small (one memoized count of the cached grain; at the
-    // bench SFs broadcast measures ~0.4 s faster than the shuffled-hash
-    // form), shuffled-hash beyond RankBroadcastMaxRows
-    // (1M rows ≈ 120 MB built — still far under executor memory).
-    val rankedSide = ranked.select("v", "fr")
-    val supSmall = graft.Tables.value(s, graft.Tables.memoName(d, "kruskalSupSmall")) {
-      sup.count() <= RankBroadcastMaxRows
-    }
-    val per = cells.join(
-      if (supSmall) broadcast(rankedSide) else rankedSide.hint("shuffle_hash"),
-      "v")
+    // at sf0.1) and its size estimate sat under the auto-broadcast
+    // threshold, so the planner silently broadcast it; rankSide picks the
+    // strategy from the support's row count instead
+    val ranked = graft.api.Graft.tieRanks(sup, Nil, "v", "t", "fr")
+    val per = cells.join(graft.api.Graft.rankSide(sup, ranked.select("v", "fr")), "v")
       .groupBy("g").agg(sum("c").as("ng"), sum(col("c") * col("fr")).as("rg"))
     // r15 session 2: the tie statistics read only the tie sizes `t`, not
     // the ranks — aggregating the SUPPORT instead of `ranked` drops the

@@ -996,9 +996,7 @@ object Recommender {
     // pred grid is nearly row-unique, so this agg is fact-sized and was
     // being rebuilt at every prefix-scan reference (see Tables.predSupport)
     val sup = graft.Tables.predSupport(s, d).select("pred", "cp", "t")
-    val ranked = graft.api.Graft.prefixSum(sup, "pred", Seq("t"))
-      .withColumn("fr", (col("t_cum") - col("t")).cast("double") +
-        (col("t") + 1).cast("double") / lit(2.0))
+    val ranked = graft.api.Graft.tieRanks(sup, Nil, "pred", "t", "fr")
     ranked.agg(sum("t").as("n"), sum("cp").as("n_pos"),
         sum(col("cp") * col("fr")).as("rpos"))
       // nullif: a single-class corpus has no pairs to order — null, not

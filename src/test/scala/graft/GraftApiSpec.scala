@@ -857,47 +857,100 @@ class GraftApiSpec extends AnyFunSuite {
       "NULL group rows must form their own complete ntile split")
   }
 
-  test("mannWhitney/spearman facades reproduce q211/q210 exactly") {
-    // q211's exact input relation, rebuilt generically, then the facade's
-    // raw outputs pinned at the same edge the operator pins
+  /** The 1-based tie-averaged rank of each distinct value of `vs`. */
+  private def driverTieRanks(vs: Seq[Double]): Map[Double, Double] = {
+    val sorted = vs.sorted
+    val out = scala.collection.mutable.Map.empty[Double, Double]
+    var i = 0
+    while (i < sorted.size) {
+      var j = i
+      while (j < sorted.size && sorted(j) == sorted(i)) j += 1
+      out(sorted(i)) = (i + 1 + j).toDouble / 2.0 // mean of ranks i+1..j
+      i = j
+    }
+    out.toMap
+  }
+
+  test("mannWhitney/spearman law: equals a driver rank computation on q211/q210's inputs") {
+    // q211's input relation: per-user purchase spend split into hash arms
+    // (its values are distinct at sf0.001; q210's quantities below tie)
     val spend = Tables.events(s, d).filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(Tables.r2(sum("value")).as("y"))
       .withColumn("arm",
         when(Graft.hashBucket(col("user_id"), 2) === 0, "A").otherwise("B"))
-    val mw = Graft.mannWhitney(spend, "y", "arm", "A", "B")
-      .select(col("n_a"), col("n_b"), Tables.r2(col("u_a")).as("u_a"),
-        Tables.r4(col("z")).as("z"))
-    assert(mw.collect().toSeq ==
-      graft.operators.Analytics.q211(s, d).collect().toSeq)
+    val arms = spend.select("y", "arm").collect()
+      .map(r => (r.getDouble(0), r.getString(1))).toSeq
+    val fr = driverTieRanks(arms.map(_._1))
+    val na = arms.count(_._2 == "A").toDouble
+    val nb = arms.size - na
+    val n = na + nb
+    val ua = arms.filter(_._2 == "A").map(a => fr(a._1)).sum - na * (na + 1) / 2.0
+    val tie3 = arms.groupBy(_._1).values
+      .map { g => val t = g.size.toDouble; t * t * t - t }.sum
+    val z = (ua - na * nb / 2.0) /
+      math.sqrt(na * nb / 12.0 * ((n + 1) - tie3 / (n * (n - 1))))
+    val mw = Graft.mannWhitney(spend, "y", "arm", "A", "B").head()
+    assert(mw.getAs[Long]("n_a") == na.toLong && mw.getAs[Long]("n_b") == nb.toLong)
+    assert(math.abs(mw.getAs[Double]("u_a") - ua) < 1e-9)
+    assert(math.abs(mw.getAs[Double]("z") - z) < 1e-9)
     // an empty arm zeroes the variance term: null z, not /0
     val oneArm = Graft.mannWhitney(spend.filter(col("arm") === "A"), "y", "arm", "A", "B")
       .head()
     assert(oneArm.getAs[Long]("n_b") == 0L && oneArm.isNullAt(oneArm.fieldIndex("z")))
+
+    // q210's input relation, plus a group whose x support is a single
+    // value: zero rank variance gives a null coefficient, not
+    // [DIVIDE_BY_ZERO]
     val base = Tables.lineitem(s, d).select(col("l_returnflag").as("rf"),
       col("l_quantity").as("x"),
       Tables.r2(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("y"))
-    // plus a degenerate group whose x support is a single value: zero rank
-    // variance gives a null coefficient (as q210), not [DIVIDE_BY_ZERO]
     val spark = s
     import spark.implicits._
     val flat = Seq(("~", 1, 2.0), ("~", 1, 3.0)).toDF("rf", "x", "y")
       .select(base.schema.map(f => col(f.name).cast(f.dataType)): _*)
-    val sp = Graft.spearman(base.unionByName(flat), Seq("rf"), "x", "y")
-      .select(col("rf"), col("n"), Tables.r4(col("spearman")).as("spearman"))
-      .orderBy("rf")
-    assert(sp.collect().toSeq ==
-      graft.operators.Analytics.q210(s, d).collect().toSeq :+ org.apache.spark.sql.Row("~", 2L, null))
+    val input = base.unionByName(flat)
+    val got = Graft.spearman(input, Seq("rf"), "x", "y").collect()
+      .map(r => r.getString(0) -> ((r.getAs[Long]("n"),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2))))).toMap
+    val rows = input.select(col("rf"), col("x").cast("double"), col("y")).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got.keySet == rows.map(_._1).toSet)
+    rows.groupBy(_._1).foreach { case (g, rs) =>
+      val fx = driverTieRanks(rs.map(_._2)); val fy = driverTieRanks(rs.map(_._3))
+      val rx = rs.map(r => fx(r._2)); val ry = rs.map(r => fy(r._3))
+      val m = rs.size.toDouble
+      val num = m * rx.zip(ry).map { case (a, b) => a * b }.sum - rx.sum * ry.sum
+      val den = math.sqrt((m * rx.map(a => a * a).sum - rx.sum * rx.sum) *
+        (m * ry.map(b => b * b).sum - ry.sum * ry.sum))
+      val (gn, gr) = got(g)
+      assert(gn == rs.size, s"group $g")
+      if (den == 0.0) assert(gr.isEmpty, s"group $g: zero rank variance must give null")
+      else assert(gr.exists(v => math.abs(v - num / den) < 1e-9), s"group $g: $gr vs ${num / den}")
+    }
+    assert(got("~") == ((2L, None)))
   }
 
-  test("lorenz facade reproduces q224 exactly") {
+  test("lorenz law: equals a driver cumulative-share scan on q224's input") {
+    // q224's input relation: one revenue row per customer
     val rev = Tables.orders(s, d).groupBy("o_custkey")
       .agg(Tables.r2(sum("o_totalprice")).as("rev"))
-    val api = Graft.lorenz(rev, "rev")
-      .select(col("decile"), Tables.r4(col("cum_population")).as("cum_customers"),
-        Tables.r4(col("cum_value")).as("cum_revenue"))
-      .orderBy("decile")
-    assert(api.collect().toSeq ==
-      graft.operators.Analytics.q224(s, d).collect().toSeq)
+    val got = Graft.lorenz(rev, "rev").collect()
+      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    val vals = rev.select("rev").collect().map(_.getDouble(0)).toSeq
+    val totC = vals.size.toDouble
+    val totR = vals.sum
+    var cc = 0L; var cr = 0.0
+    val cells = vals.groupBy(identity).map { case (v, g) => (v, g.size) }
+      .toSeq.sortBy(_._1).map { case (v, c) =>
+        cc += c; cr += v * c
+        (math.ceil(cc / totC * 10.0).toLong, cc / totC, cr / totR)
+      }
+    val want = cells.groupBy(_._1).map { case (dec, xs) =>
+      dec -> ((xs.map(_._2).max, xs.map(_._3).max)) }
+    assert(got.keySet == want.keySet)
+    got.foreach { case (dec, (f, sh)) =>
+      assert(math.abs(f - want(dec)._1) < 1e-12 &&
+        math.abs(sh - want(dec)._2) < 1e-12, s"decile $dec") }
   }
 
   test("adamicAdar/triangles facades reproduce q133/q134 exactly") {

@@ -550,6 +550,31 @@ class PlanRegressionSpec extends AnyFunSuite {
       s"construction jobs in keys outside the named set: ${(ran -- allowed).toSeq.sorted}")
   }
 
+  test("spearmanSup_y has one builder: q243 and q210 share it in either order, and no size flag is corpus-keyed") {
+    val s2 = s.newSession()
+    val memo = Tables.memoName(d, "spearmanSup_y")
+    def inOrder(q243First: Boolean) = {
+      Tables.release(s2)
+      val run = Seq("q243" -> (operators.Analytics.q243 _),
+        "q210" -> (operators.Analytics.q210 _))
+      val out = (if (q243First) run else run.reverse)
+        .map { case (k, q) => k -> q(s2, d).collect().toSeq }.toMap
+      (out, s2.table(memo).schema)
+    }
+    try {
+      val (a, schemaA) = inOrder(q243First = true)
+      val (b, schemaB) = inOrder(q243First = false)
+      assert(a == b, "q210/q243 outputs depend on which built the shared memo")
+      assert(schemaA == schemaB, s"cached spearmanSup_y schema: $schemaA vs $schemaB")
+      assert(schemaA.fieldNames.toSeq == Seq("rf", "y", "t"))
+      val keys = Tables.valueKeys(s2)
+      val flags = keys.filter(k => k.startsWith("graft_memo_") && k.contains("Small"))
+      assert(flags.isEmpty, s"a corpus-keyed size flag is back: $flags")
+      assert(keys.exists(_.startsWith("rows.")),
+        "the rank sides' row counts must be kept under their support's plan hash")
+    } finally Tables.release(s2)
+  }
+
   test("Tables.events: UTC is baked at analysis, the caller's timezone is restored") {
     // the loader pins UTC only while BUILDING the plan (Spark resolves
     // timezone-aware casts against the session tz at analysis); a session
